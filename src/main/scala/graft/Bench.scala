@@ -1,14 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 object Bench {
-
-  /** RocksDB state-store provider (same constant the job mains default
-    * to) — the streaming throughput numbers should measure the production
-    * state path, not the heap store.
-    */
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** 1-minute system load average (or -1 where the JVM can't see it). A
     * loaded machine inflates every wall-clock number silently — r4's
@@ -62,55 +56,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Whole-stage-codegen compile cache (static conf, default 100
-      // entries): a 217-query interleaved pass generates thousands of
-      // distinct codegen units, so at the default size every rep of every
-      // query re-Janino-compiles its whole plan — pure fixed overhead
-      // that dwarfs the data work at the small SFs and is still dead
-      // weight at scale (the cache is keyed by generated SOURCE, so the
-      // entries are scale-independent; ~tens of KB of bytecode each).
-      // Env-parameterized for A/B (SPARK_GRAFT_CODEGEN_CACHE=100 restores
-      // the Spark default); this is a session-posture config, not a
-      // methodology change — timed regions, reps and queries unchanged.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Posture.session()
     // Stats-ON default posture (r15 verdict #1): the benched binary plans
     // with ANALYZE'd catalog statistics + CBO, the same posture Verify
-    // checks and a production deployment runs. The one-time ANALYZE cost
-    // is priced into setup_total (emitted separately as stats_s so rounds
-    // before the flip stay comparable by subtraction). SPARK_GRAFT_STATS=0
-    // opts out — the r14/r15-style stats-less A/B lever.
+    // checks. The one-time ANALYZE cost is priced into setup_total
+    // (emitted separately as stats_s so rounds before the flip stay
+    // comparable by subtraction); `env.stats` names the posture in force.
+    val statsT0 = System.nanoTime()
+    val stats = Posture.statsOn(spark, sfDir)
     val statsS: Double =
-      if (sys.env.get("SPARK_GRAFT_STATS").contains("0")) 0.0
-      else {
-        val t0 = System.nanoTime()
-        try {
-          spark.conf.set("spark.sql.cbo.enabled", "true")
-          spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-          graft.plans.Cbo.ensureStatsAll(spark, sfDir)
-          spark.conf.set(Tables.statsCatalogConf, sfDir)
-        } catch { case scala.util.control.NonFatal(e) =>
-          // degrade to stats-less rather than killing the whole bench
-          // (the catalog conf stays unset → path reads; half-made tables
-          // were dropped by createAnalyzed's failure atomicity). NonFatal
-          // only, and the CBO confs reset, so the degraded run is the
-          // true stats-less posture, not CBO-over-empty-stats.
-          spark.conf.set("spark.sql.cbo.enabled", "false")
-          spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-          System.err.println(s"[bench] stats-ON setup failed, running " +
-            s"stats-less: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
+      if (stats == "off") 0.0 else (System.nanoTime() - statsT0) / 1e9
     val loadStart = loadAvg
     // Pruning-proof action: a noop-format write consumes every output
     // column of every row, so Catalyst cannot collapse projection-only
@@ -123,7 +79,7 @@ object Bench {
     // array-expression path, and a tiny run of the heaviest operator shape
     // (so Janino compiles the shingle/hash pipeline before the measured
     // pass). Warmup is best effort — a missing table must not kill the run.
-    def warm(f: => Unit): Unit = try f catch { case _: Throwable => () }
+    def warm(f: => Unit): Unit = try f catch { case NonFatal(_) => () }
     warm(spark.range(10000).selectExpr("id % 7 k").groupBy("k").count().collect())
     warm(spark.read.parquet(s"$sfDir/region.parquet").count())
     warm(exec(spark.read.parquet(s"$sfDir/embeddings.parquet").limit(8)
@@ -172,7 +128,7 @@ object Bench {
     def timed(fn: (SparkSession, String) => DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       try { exec(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case _: Throwable => None }
+      catch { case NonFatal(_) => None }
       finally reclaim()
     }
     // One-time store builds (the mutation half of the CDC lifecycle
@@ -194,7 +150,7 @@ object Bench {
           val t0 = System.nanoTime()
           def attempt(): Boolean =
             try { q.setup.get(spark, sfDir); true }
-            catch { case _: Throwable => false }
+            catch { case NonFatal(_) => false }
           val ok = attempt() || attempt()
           reclaim()
           q.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
@@ -276,9 +232,14 @@ object Bench {
         s""""total_per_cal":${perCal(total)},""" +
         s""""total_warm_per_cal":${perCal(totalWarm)}"""
     val loadMid = loadAvg
+    // `cpus` is what the JVM sees; the rest is the session posture in
+    // force, so the artifact explains its own numbers.
     def env(loadEnd: Double) =
       s"""{"cpus":${Runtime.getRuntime.availableProcessors},""" +
-        s""""load_start":$loadStart,"load_end":$loadEnd}"""
+        s""""load_start":$loadStart,"load_end":$loadEnd,""" +
+        s""""cores":${Posture.cores},""" +
+        s""""codegen_cache_entries":${Posture.codegenCacheEntries},""" +
+        s""""stats":"$stats"}"""
     // The batch readout prints BEFORE the streaming section runs: the
     // driver's r7 artifact came back rc 124 / parsed:null because a timeout
     // inside the streaming bench killed the process before the (then
@@ -324,7 +285,10 @@ object Bench {
   }
 
   /** Bench family of a query name, from the §2 inventory's own naming
-    * conventions (q* relational, dedup_/decontaminate_ dedup, ...).
+    * conventions (q* relational, dedup_/decontaminate_ dedup, ...). Every
+    * registered name maps to a named family (RegistrySpec pins it); an
+    * unknown prefix lands in "unmapped" instead of padding another
+    * family's subtotal.
     */
   private[graft] def family(name: String): String = name match {
     case n if n.startsWith("q") && n.length > 1 && n(1).isDigit => "relational"
@@ -338,7 +302,15 @@ object Bench {
     case n if n.startsWith("sketch_") => "sketches"
     case n if n.startsWith("pack_") || n.startsWith("mix_") ||
       n.startsWith("split_") || n.startsWith("shuffle_") => "packing"
-    case _ => "windows" // candlestick_*, sliding_*, tick_*
+    case n if n.startsWith("io_") => "io"
+    case n if n.startsWith("gov_") => "governance"
+    case n if n.startsWith("graph_") => "graph"
+    case n if n.startsWith("er_") => "entity_resolution"
+    case n if n.startsWith("dim_") => "dimensions"
+    case n if n.startsWith("mine_") => "mining"
+    case n if n.startsWith("candlestick_") || n.startsWith("sliding_") ||
+      n.startsWith("tick_") => "windows"
+    case _ => "unmapped"
   }
 
   /** Streaming-path throughput over a FIXED replay, so regressions in the
@@ -355,9 +327,10 @@ object Bench {
     * would bench the blow-up, not the operator — see the generation
     * comment below. Each pipeline drains under
     * Trigger.AvailableNow into a noop sink on the RocksDB state store
-    * (the job mains' default). Readouts per pipeline: processing rows/s =
-    * sum(numInputRows) / sum(triggerExecution) (input generation and query
-    * startup excluded), plus the final state-store footprint
+    * ([[Posture.session]]'s, as in the job mains). Readouts per
+    * pipeline: processing rows/s = sum(numInputRows) /
+    * sum(triggerExecution) (input generation and query startup
+    * excluded), plus the final state-store footprint
     * (`*_state_rows` / `*_state_bytes` -- the bounded-state claims made
     * per operator, now measured). A failed pipeline reports -1 rather
     * than vanishing.
@@ -414,8 +387,6 @@ object Bench {
       .repartition(16)
       .write.mode("overwrite").option("timestampFormat", Tick.TsFormatSql)
       .json(s"$tmp/simdocs")
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     // (rps, state_rows, state_bytes) from the drained query's progress feed
     def run(out: DataFrame): (Double, Double, Double) = {
       val q = TickSink.start(out, TickSink.Noop, availableNow = true)
@@ -446,7 +417,7 @@ object Bench {
       else math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_STREAM_REPS", "2").toInt)
     def one(name: String, f: => (Double, Double, Double)): Seq[(String, Double)] = {
       val outcomes = (1 to streamReps).map { _ =>
-        try f catch { case _: Throwable => (-1.0, -1.0, -1.0) }
+        try f catch { case NonFatal(_) => (-1.0, -1.0, -1.0) }
       }
       val ok = outcomes.filter(_._1 >= 0)
       val best = if (ok.isEmpty) (-1.0, -1.0, -1.0) else ok.maxBy(_._1)
@@ -489,10 +460,6 @@ object Bench {
             .select(explode(split(lower(trim(col("text"))), "\\s+")).as("t"))
             .as[String]).toDF())
       })
-    prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
     (lines ++ Seq("tick_rows" -> nTicks.toDouble,
       "doc_rows" -> nDocs.toDouble * docReps,
       "simdoc_rows" -> nSimDocs.toDouble))

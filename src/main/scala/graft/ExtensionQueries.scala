@@ -2652,10 +2652,11 @@ object ExtensionQueries {
       // amortizes — sim_ann_ivf is the benchmarked single-shot ANN representative
       oracle = Some(ivfTrainedOracle(nProbe = 3))),
 
-    // The high-recall IVF operating point from the RecallGrid sweep: two
-    // training rounds + 8 of 16 cells probed reaches recall@10 = 0.95
-    // (vs 0.825 at the iters=1/nProbe=3 default on the same grid), with
-    // candidate volume still the nProbe/nCells = 1/2 corpus fraction —
+    // The high-recall IVF operating point from the IVF recall grid
+    // (SURVEY §8.7): two training rounds + 8 of 16 cells probed reaches
+    // recall@10 = 0.95 (vs 0.825 at the iters=1/nProbe=3 default on the
+    // same grid), with candidate volume still the nProbe/nCells = 1/2
+    // corpus fraction —
     // the knob a production corpus turns when the similarity consumer
     // needs ≥0.95 recall. Plan shape identical to _trained.
     QuerySpec(
@@ -2693,7 +2694,7 @@ object ExtensionQueries {
       // each invocation so the round trip is always exercised fresh
       oracle = ivfPqOracle),
 
-    // The grid-selected IVFADC operating point (tools/IvfPqGrid, sf0.01):
+    // The grid-selected IVFADC operating point (SURVEY §8.12, sf0.01):
     // nProbe=2 reaches recall@10 = 0.45 vs the default nProbe=3's 0.388
     // AND the full-corpus trained-ADC ceiling's 0.425 — on structure-free
     // embeddings the coarse shortlist filters PQ quantization-noise false
@@ -4110,8 +4111,8 @@ object ExtensionQueries {
     // adaptive skew-join splits the oversized probe partition at runtime
     // (PlanSpec pins OptimizeSkewedJoin firing); oracle = the plain
     // join, so mitigation is provably result-invisible. Completes the
-    // manual-vs-adaptive pair with q22_join_salted_hot; tools/SkewProbe
-    // records which wins at which skew (SURVEY §8.16 measured note).
+    // manual-vs-adaptive pair with q22_join_salted_hot; SURVEY §8.16's
+    // measured note records which wins at which skew.
     QuerySpec(
       "q36_join_skew_aqe",
       (s, dir) => Joins.skewAqeJoin(s,
@@ -4782,9 +4783,10 @@ object ExtensionQueries {
 
     // The CALIBRATED model gate: cut the score at the weak-label base
     // rate (accept the npos top-scoring docs; ties share a fate via the
-    // rank-convention cut) instead of score>0, which tools/ModelEval
-    // proved is recall-only. One scan computes label + score together;
-    // the cut comes from the tiny score histogram.
+    // rank-convention cut) instead of score>0, which the out-of-sample
+    // eval (SURVEY §8.12) proved is recall-only. One scan computes
+    // label + score together; the cut comes from the tiny score
+    // histogram.
     QuerySpec(
       "text_quality_gate_calibrated",
       (s, dir) => TextAnalysis.qualityModelCalibrated(docs(s, dir)),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The harness `embeddings` table is near-random (no cluster structure),
   * so every recall gauge over it can only ever emit the honest REVOKE
-  * number (e.g. `sim_bitext_recall`: 363 bp at 6 bits — tools/BitextGrid).
+  * number (e.g. `sim_bitext_recall`: 363 bp at 6 bits — SURVEY §8.13).
   * That proves the gauges catch a bad blocker but never that they pass a
   * good one. This fixture plants the geometry the blockers exist for —
   * tight cosine clusters (intra-cluster cos ≈ 0.999) with one "en" and

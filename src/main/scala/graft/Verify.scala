@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,46 +11,11 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same codegen-cache posture as Bench (results are unaffected; this
-      // only skips re-compiling identical generated sources)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      // Write timestamps as INT64 micros (not INT96) so the driver's DuckDB
-      // read of our result parquet sees the same type/values as its oracle.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Stats-ON default posture (r15 verdict #1): ANALYZE'd catalog tables
-    // for every non-events table + CBO with join reorder, so the verified
-    // binary exercises the SAME statistics-fed plans the engine runs at
-    // scale — the r15 sweep proved 6 plan changes, all wins, and a 100 TB
-    // engine does not plan stats-less. SPARK_GRAFT_STATS=0 opts out (the
-    // A/B lever); the NTZ FilterEstimation guard lives in ensureStatsAll.
-    if (!sys.env.get("SPARK_GRAFT_STATS").contains("0")) try {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      graft.plans.Cbo.ensureStatsAll(spark, sfDir)
-      spark.conf.set(Tables.statsCatalogConf, sfDir)
-    } catch { case scala.util.control.NonFatal(e) =>
-      // a failed ANALYZE must degrade to the stats-less posture, never
-      // zero the round's correctness artifact (createAnalyzed already
-      // dropped any half-made table; the catalog conf stays unset, so
-      // every load falls back to path reads). NonFatal only — an OOM or
-      // interrupt must kill the run, not masquerade as a degraded one.
-      // Reset the CBO confs set above so the degraded run truly IS the
-      // stats-less posture (CBO over empty stats is not the same plans).
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      System.err.println(s"[verify] stats-ON setup failed, running " +
-        s"stats-less: ${e.getMessage}")
-    }
+    val spark = Posture.session()
+    // Verify checks the same statistics-fed plans Bench times and a
+    // deployment runs; the NTZ FilterEstimation guard lives in
+    // ensureStatsAll.
+    Posture.statsOn(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try {
@@ -66,7 +31,7 @@ object Verify {
         }
         df.select(cols.toIndexedSeq: _*).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

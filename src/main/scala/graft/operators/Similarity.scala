@@ -252,7 +252,7 @@ object Similarity {
     * pushed Filter, and for `qn` that inlined form re-evaluates the
     * array_max INSIDE the per-element transform lambda — O(dim²) work +
     * allocations per row, MEASURED as the whole query running 3× slower
-    * (1.10 s vs 0.36 s steady-state, tools/Profile). The amax predicate
+    * (1.10 s vs 0.36 s steady-state, SURVEY §8.7). The amax predicate
     * re-inlines as one O(dim) pass.
     */
   private def quantizedVecs(emb: DataFrame): DataFrame =
@@ -554,8 +554,8 @@ object Similarity {
     * nCells of the corpus, and the per-cell work is even. Probe cells are
     * distinct, so no result dedup is needed.
     *
-    * Defaults (iters=1, nProbe=3) come from the [[graft.tools.RecallGrid]]
-    * sweep: on this corpus one balanced-update round + 3 probes beats the
+    * Defaults (iters=1, nProbe=3) come from the IVF recall grid (SURVEY
+    * §8.6): on this corpus one balanced-update round + 3 probes beats the
     * first-N single-probe baseline (0.888 vs 0.875 recall@10), while
     * further rounds keep re-balancing boundaries without improving
     * neighbor containment — near-random embeddings have no cluster

@@ -723,11 +723,11 @@ object TextAnalysis {
 
   /** Corpus-size threshold (total text chars) where the delta-maintained
     * pair-count arm starts beating full recounting, measured on the
-    * replicated-sf0.1 ladder (tools/BpeProbe `rep` arg, r18 — SURVEY
-    * §8.21 records the runs): recounting's per-pass cost grows with the
-    * corpus while the delta's is O(|merged positions|) + flat overhead,
-    * so below the crossover the simple recount wins in absolute wall
-    * time and above it the algebra does. The EXCLUSIVE (sbt-idle) rungs
+    * replicated-sf0.1 ladder (r18 — SURVEY §8.21 records the runs):
+    * recounting's per-pass cost grows with the corpus while the delta's
+    * is O(|merged positions|) + flat overhead, so below the crossover
+    * the simple recount wins in absolute wall time and above it the
+    * algebra does. The EXCLUSIVE (sbt-idle) rungs
     * bracket the crossover between ×16 (23.8 M chars: recount 102.8 s
     * vs delta 122.2 s) and ×32 (47.5 M chars: delta 180.9 s vs recount
     * 212.1 s); 35 M is the bracket's midpoint. The k64 trainer picks
@@ -1233,16 +1233,16 @@ object TextAnalysis {
       .groupBy(col("pass"), col("model_pass"))
       .agg(count(lit(1)).as("n"))
 
-  /** CALIBRATED model quality gate — the production cut. `tools/ModelEval`
-    * proved the naive score>0 decision is recall-only on this model
-    * (zero false-rejects, every error a false-accept), so the gate
-    * instead cuts the SCORE at the weak-label base rate: accept the
-    * `npos` highest-scoring docs, where `npos` is the gopher-pass count —
-    * the model ranks, the calibrated threshold decides (the
-    * fastText/DCLM operating-point convention). The cut value is the
-    * score at ascending rank `n − npos` (the [[Percentiles]] rank
-    * convention), so equal scores share a fate — deterministic where a
-    * count-exact cut is not, and hash-exact cross-engine.
+  /** CALIBRATED model quality gate — the production cut. The out-of-sample
+    * eval (SURVEY §8.12) proved the naive score>0 decision is recall-only on
+    * this model (zero false-rejects, every error a false-accept), so the gate
+    * instead cuts the SCORE at the weak-label base rate: accept the `npos`
+    * highest-scoring docs, where `npos` is the gopher-pass count — the model
+    * ranks, the calibrated threshold decides (the fastText/DCLM
+    * operating-point convention). The cut value is the score at ascending
+    * rank `n − npos` (the [[Percentiles]] rank convention), so equal
+    * scores share a fate — deterministic where a count-exact cut is not,
+    * and hash-exact cross-engine.
     *
     * Shape at 100 TB: ONE corpus scan computes the weak label AND the
     * model score together ([[gopherLabeled]] + the literal-weights fold —

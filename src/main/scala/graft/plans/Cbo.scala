@@ -66,9 +66,9 @@ object Cbo {
     * stats-ON-everywhere posture a production deployment runs with.
     * Column lists cover every join key and the selective filter/agg
     * columns the registered queries touch; heavy payload columns (text,
-    * embedding) are deliberately excluded from FOR COLUMNS. Used by the
-    * `tools/StatsSweep` breadth gauge and the [[graft.Tables]]
-    * stats-catalog redirect.
+    * embedding) are deliberately excluded from FOR COLUMNS. Used by
+    * [[graft.Posture.statsOn]], the StatsSweep breadth gauge (SURVEY
+    * §8.17) and the [[graft.Tables]] stats-catalog redirect.
     */
   def ensureStatsAll(spark: SparkSession, dir: String): Map[String, String] =
     ensureTables(spark, dir, Map(
@@ -149,12 +149,12 @@ object Cbo {
     // Spark 4.1 FilterEstimation.evaluateBinary has no TimestampNTZType
     // case (scala.MatchError at FilterEstimation.scala:281) — column
     // stats on an NTZ column crash PLANNING of any query comparing it to
-    // a literal once CBO is on (the StatsSweep breadth gauge surfaced
-    // this on q4/q7's o_orderdate range filters; the driver's parquet
-    // timestamps all read as NTZ). Excluding NTZ columns from FOR
-    // COLUMNS makes estimation skip them (no stats -> default
-    // selectivity) at the cost of date-range selectivity — the safe
-    // posture until the upstream gap closes.
+    // a literal once CBO is on (the stats-ON breadth sweep, SURVEY
+    // §8.17, surfaced this on q4/q7's o_orderdate range filters; the
+    // driver's parquet timestamps all read as NTZ). Excluding NTZ
+    // columns from FOR COLUMNS makes estimation skip them (no stats ->
+    // default selectivity) at the cost of date-range selectivity — the
+    // safe posture until the upstream gap closes.
     val schema = spark.table(name).schema
     val safe = cols.filter(c =>
       schema(c).dataType != org.apache.spark.sql.types.TimestampNTZType)
@@ -181,10 +181,23 @@ object Cbo {
     * since Catalyst reads the conf at optimization time, not DataFrame
     * construction time.
     */
-  def withCbo[T](spark: SparkSession)(body: => T): T = {
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, "true"))
+  def withCbo[T](spark: SparkSession)(body: => T): T =
+    withConfs(spark, Seq("spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true"))(body)
+
+  /** [[withCbo]] plus the [[graft.Tables.statsCatalogConf]] redirect onto
+    * `dir`'s ANALYZE'd tables ([[ensureStatsAll]] must have run): the
+    * stats-ON posture, scoped to `body`. Same force-inside rule.
+    */
+  def withStatsOn[T](spark: SparkSession, dir: String)(body: => T): T =
+    withCbo(spark) {
+      withConfs(spark, Seq(graft.Tables.statsCatalogConf -> dir))(body)
+    }
+
+  private def withConfs[T](spark: SparkSession, kvs: Seq[(String, String)])(
+      body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -183,8 +183,7 @@ object DocPipelineJob {
       case a if a.startsWith("--weights=") => a.stripPrefix("--weights=")
     }
 
-    val spark = JobRunner.session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Posture.session()
 
     val in = DocPipeline.fileJson(spark, inputDir)
     val out = (weightsDir, evalBucketsDir) match {
@@ -220,7 +219,7 @@ object DocPipelineJob {
   *   [--max-hamming=3] [--horizon-seconds=3600]
   * Input: a JSON document stream with (doc_id, text, utc); output: the
   * near-dup pair stream of [[StreamingQueries.simhashPairsStream]].
-  * Requires the RocksDB state store ([[JobRunner.session]]'s default —
+  * Requires the RocksDB state store ([[graft.Posture.session]]'s default —
   * transformWithState needs column families the heap store lacks).
   */
 object NearDupJob {
@@ -243,8 +242,7 @@ object NearDupJob {
         a.stripPrefix("--horizon-seconds=").toLong
     }.getOrElse(3600L)
 
-    val spark = JobRunner.session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Posture.session()
     import spark.implicits._
 
     val docs = spark.readStream.schema(nearDupDocSchema).json(inputDir)
@@ -273,7 +271,7 @@ object NearDupJob {
   * regularized bucket grid of [[StreamingQueries.gridForwardFillTws]] —
   * every closed bucket in order, observed buckets with their exact
   * average, gaps carrying the last observed value. Requires the RocksDB
-  * state store ([[JobRunner.session]]'s default).
+  * state store ([[graft.Posture.session]]'s default).
   */
 object GridFillJob {
   import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType, TimestampType}
@@ -295,8 +293,7 @@ object GridFillJob {
       case a if a.startsWith("--watermark=") => a.stripPrefix("--watermark=")
     }.getOrElse("10 seconds")
 
-    val spark = JobRunner.session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Posture.session()
     import spark.implicits._
 
     val events = spark.readStream.schema(fillEventSchema).json(inputDir)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** S13 job-status surface: the reference's non-local branch reports job
@@ -39,35 +38,6 @@ object JobStatus {
   */
 private[streaming] object JobRunner {
 
-  /** Provider class for the RocksDB state store (ships with Spark; the
-    * rocksdbjni native lib rides in the distribution jars).
-    */
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // 100 TB stance: the default HDFS-backed state store keeps every key's
-    // state on the executor HEAP — the first streaming scale-killer once
-    // keyed state (windows, dedup sets, per-key EWMA) outgrows memory.
-    // RocksDB keeps state on local disk with a block cache, so state size
-    // is bounded by disk, not heap. Flag-gated: SPARK_GRAFT_STATE_STORE=
-    // memory restores the heap store for tiny local replays.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Parallelism is sized by config, not hardcoded 1: the reference
-      // pinned parallelism=1 only to dodge an idle-shard watermark stall
-      // (tumbling_window.py:50-60); Spark's per-source watermark tracking
-      // has no such constraint.
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    if (!sys.env.get("SPARK_GRAFT_STATE_STORE").contains("memory"))
-      builder.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    builder.getOrCreate()
-  }
-
   def parseSink(spec: String): TickSink.Sink = spec.split(":", 3) match {
     case Array("console") => TickSink.Console
     // the reference's print sink renders `+I[...]` changelog rows
@@ -88,8 +58,7 @@ private[streaming] object JobRunner {
     val once = args.contains("--once")
 
     val conf = JobConfig.load(configPath)
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Posture.session()
 
     // Source: JSON tick stream, schema-on-read, config-driven timestamp
     // standard + init position (reference DDL tumbling_window.py:115-131).

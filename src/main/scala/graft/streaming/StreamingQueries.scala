@@ -133,7 +133,7 @@ object StreamingQueries {
     * living forever; processing-time TimeMode is what arms it) and named
     * state variables with schema evolution (the `"ewma"` ValueState can
     * gain fields across restarts). Requires the RocksDB state store —
-    * the job mains' default ([[JobRunner.session]]).
+    * the job mains' default ([[graft.Posture.session]]).
     *
     * Both forms stay registered: `mapGroupsWithState` remains supported
     * API surface (its spec doubles as a cross-API parity check — see

@@ -1,26 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Posture
 
 /** Plan-shape audit main: for each named registry query (or all), print
   * the physical-plan stats the scale ledger cares about — parquet scans,
   * hash-partitioning exchanges, join strategies, cartesians — so a
-  * regression is visible without reading full explains. Not part of the
-  * driver contract.
+  * regression is visible without reading full explains. Plans under the
+  * SAME posture as Bench ([[Posture.session]] + [[Posture.statsOn]]).
+  * Not part of the driver contract.
   *
   * runMain graft.tools.PlanAudit [query1,query2,...]
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Posture.session()
     spark.sparkContext.setLogLevel("ERROR")
+    Posture.statsOn(spark, sfDir)
     val names =
       if (args.nonEmpty) args(0).split(",").toSeq
       else graft.Registry.all.map(_.name)

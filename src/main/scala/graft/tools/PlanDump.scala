@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Posture
 
 /** Dump `.explain("formatted")` for named registry queries to files —
   * the plan evidence the optimization rounds commit under `plans/rNN/`.
-  * Runs under the SAME posture as Bench (stats-ON catalog tables + CBO,
-  * shuffle partitions = SPARK_GRAFT_CPUS) so the dumped plan is the
-  * benched plan. Not part of the driver contract.
+  * Runs under the SAME posture as Bench ([[Posture.session]] +
+  * [[Posture.statsOn]]) so the dumped plan is the benched plan. Not
+  * part of the driver contract.
   *
   * runMain graft.tools.PlanDump <outDir> <suffix> [query1,query2,...]
   * e.g. runMain graft.tools.PlanDump plans/r18 before graph_triangles
@@ -16,21 +16,9 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Posture.session()
     spark.sparkContext.setLogLevel("ERROR")
-    if (!sys.env.get("SPARK_GRAFT_STATS").contains("0")) {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      graft.plans.Cbo.ensureStatsAll(spark, sfDir)
-      spark.conf.set(graft.Tables.statsCatalogConf, sfDir)
-    }
+    Posture.statsOn(spark, sfDir)
     val names =
       if (args.length > 2) args(2).split(",").toSeq
       else graft.Registry.all.map(_.name)

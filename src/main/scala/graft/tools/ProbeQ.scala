@@ -1,11 +1,10 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.Posture
 
 /** Time named registry queries under the SAME posture as Bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus, stats-ON
-  * catalog + CBO, noop-write action, setup run once and timed, persisted
-  * RDDs reclaimed between reps) — the fast per-query A/B loop. Not part
-  * of the driver contract.
+  * ([[Posture.session]] + [[Posture.statsOn]], noop-write action, setup
+  * run once and timed, persisted RDDs reclaimed between reps) — the fast
+  * per-query A/B loop. Not part of the driver contract.
   *
   * runMain graft.tools.ProbeQ <q1,q2,...> [sfDir] [reps]
   */
@@ -15,21 +14,8 @@ object ProbeQ {
     val sf = if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (!sys.env.get("SPARK_GRAFT_STATS").contains("0")) {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      graft.plans.Cbo.ensureStatsAll(spark, sf)
-      spark.conf.set(graft.Tables.statsCatalogConf, sf)
-    }
+    val spark = Posture.session()
+    Posture.statsOn(spark, sf)
     def reclaim(): Unit = spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
     for (name <- names) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Posture
 
 /** Time ONLY the bench's setup surface (stats-ON ANALYZE + each
   * benchmark=true query's one-time store build) under the same session
@@ -12,17 +12,7 @@ import org.apache.spark.sql.SparkSession
 object SetupProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Posture.session()
     def timed(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
       f
@@ -30,12 +20,7 @@ object SetupProbe {
     }
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSet) else None
-    timed("stats") {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      graft.plans.Cbo.ensureStatsAll(spark, sfDir)
-      spark.conf.set(graft.Tables.statsCatalogConf, sfDir)
-    }
+    timed("stats")(Posture.statsOn(spark, sfDir))
     graft.Registry.all.filter(q => q.benchmark && q.setup.nonEmpty)
       .filter(q => only.forall(_.contains(q.name)))
       .sortBy(_.name).foreach { q =>

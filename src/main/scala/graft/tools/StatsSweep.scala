@@ -1,14 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.{ExtensionQueries, RelationalQueries, Tables}
+import org.apache.spark.sql.DataFrame
+import graft.{ExtensionQueries, Posture, RelationalQueries, Tables}
 import graft.plans.Cbo
 
-/** Stats-ON breadth gauge (offline tool, the IvfPqGrid discipline): run
-  * the full relational q-series plus the join-shaped extension queries
-  * once PLANNED stats-less over raw parquet reads (the registered
-  * default) and once PLANNED under ANALYZE'd catalog tables with CBO +
-  * join reorder on ([[Cbo.ensureStatsAll]] + the
+/** Stats-ON breadth gauge (offline tool): run the full relational
+  * q-series plus the join-shaped extension queries once PLANNED
+  * stats-less over raw parquet reads (the registered default) and once
+  * PLANNED under ANALYZE'd catalog tables with CBO + join reorder on
+  * ([[Cbo.withStatsOn]] over [[Cbo.ensureStatsAll]]'s tables and the
   * [[Tables.statsCatalogConf]] redirect), and report which queries'
   * join ORDER (optimized-logical leaf sequence) or join STRATEGY
   * (physical join operator sequence) statistics change — then time each
@@ -69,29 +69,11 @@ object StatsSweep {
     (leafOrder(df.queryExecution.optimizedPlan.toString),
       joinOps(df.queryExecution.sparkPlan.toString))
 
-  def withStatsOn[T](spark: SparkSession, dir: String)(body: => T): T = {
-    val keys = Seq(Tables.statsCatalogConf, "spark.sql.cbo.enabled",
-      "spark.sql.cbo.joinReorder.enabled")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(Tables.statsCatalogConf, dir)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the sweep compares both postures itself, so no Posture.statsOn here
+    val spark = Posture.session()
     Cbo.ensureStatsAll(spark, dir)
     val scope = RelationalQueries.specs ++
       ExtensionQueries.specs.filter(q => extensionScope.contains(q.name))
@@ -99,7 +81,7 @@ object StatsSweep {
     scope.foreach { q =>
       try {
         val off = sig(q.run(spark, dir))
-        val on = withStatsOn(spark, dir)(sig(q.run(spark, dir)))
+        val on = Cbo.withStatsOn(spark, dir)(sig(q.run(spark, dir)))
         if (off != on) {
           changed += q.name
           println(s"CHANGED ${q.name}")
@@ -124,7 +106,7 @@ object StatsSweep {
     changed.foreach { name =>
       val q = scope.find(_.name == name).get
       val off = (1 to reps).map(_ => timed(q.run(spark, dir).collect())).min
-      val on = withStatsOn(spark, dir) {
+      val on = Cbo.withStatsOn(spark, dir) {
         (1 to reps).map(_ => timed(q.run(spark, dir).collect())).min
       }
       println(f"TIMING $name off=$off%.3f on=$on%.3f ratio=${on / off}%.2f")

@@ -112,6 +112,22 @@ class FunctionsSpec extends GraftSpec {
     assert(swCounts === isCounts, "per-user session sizes agree")
   }
 
+  test("session windows: two events exactly `gap` apart") {
+    val ev = Seq((1L, ts("2024-01-01 00:00:00")), (1L, ts("2024-01-01 00:30:00")))
+      .toDF("user_id", "ts")
+    // Spark merges them: the first event's window [ts, ts + gap) touches
+    // the second's start, and session_window merges touching windows. The
+    // ts_session_window oracle opens a new session only when
+    // `us - prev_us > 1800000000`, so an exact gap continues the session
+    // there too; `>=` would split this pair and break the hash on any
+    // user with an exact-gap pair.
+    val sessions = TimeSeries.sessionWindows(ev, "30 minutes").collect()
+    assert(sessions.length === 1, sessions.mkString("; "))
+    assert(sessions.head.getAs[Long]("n_events") === 2L)
+    assert(sessions.head.getAs[java.sql.Timestamp]("session_end") ===
+      ts("2024-01-01 01:00:00"))
+  }
+
   test("sketch distinct count tracks the exact twin within rsd tolerance") {
     val ev = Tables.load(spark, sf, "events")
     val approx = Sketches.distinctUsers(ev).collect()

@@ -4,18 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM per `sbt test` fork;
-  * suites run sequentially, so a single session keeps the run fast).
+  * suites run sequentially, so a single session keeps the run fast). The
+  * mains' posture ([[Posture.builder]]) pinned to `local[4]` whatever the
+  * host, over a temp warehouse; the state store stays Spark's default so
+  * the streaming suites choose theirs per test.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val s = Posture.builder(localCores = 4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1006,7 +1006,7 @@ class PlanSpec extends GraftSpec {
       df.queryExecution.optimizedPlan.collectLeaves().map(_.toString)
     val q33 = spec("q33_scalar_subquery_agg")
     val offLeaves = leaves(q33.run(spark, sf))
-    val (onLeaves, onRows) = graft.tools.StatsSweep.withStatsOn(spark, sf) {
+    val (onLeaves, onRows) = graft.plans.Cbo.withStatsOn(spark, sf) {
       (leaves(q33.run(spark, sf)),
         q33.run(spark, sf).collect().map(_.toString).sorted.toSeq)
     }
@@ -1019,7 +1019,7 @@ class PlanSpec extends GraftSpec {
     // (2) the NTZ guard: this PLANNING call crashed with a MatchError
     // before ensureStatsAll excluded NTZ columns from FOR COLUMNS
     val q4 = spec("q4_semi_join")
-    graft.tools.StatsSweep.withStatsOn(spark, sf) {
+    graft.plans.Cbo.withStatsOn(spark, sf) {
       q4.run(spark, sf).queryExecution.sparkPlan
     }
   }

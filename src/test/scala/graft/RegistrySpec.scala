@@ -34,6 +34,20 @@ class RegistrySpec extends GraftSpec {
       s"undocumented rows-only queries: $noOracle")
   }
 
+  test("every query lands in a named bench family; windows is the reference's") {
+    // family subtotals are read round over round: a prefix missing from
+    // the map must not pad the reference's own (about 1 s) window family
+    val fam = Registry.all.map(q => q.name -> Bench.family(q.name))
+    val unmapped = fam.collect { case (n, "unmapped") => n }
+    assert(unmapped.isEmpty,
+      s"names with no bench family: ${unmapped.mkString(", ")}")
+    val windows = fam.collect { case (n, "windows") => n }
+    val reference = Seq("candlestick_", "sliding_", "tick_")
+    assert(windows.nonEmpty)
+    assert(windows.forall(n => reference.exists(n.startsWith)),
+      s"non-reference names in windows: ${windows.mkString(", ")}")
+  }
+
   test("SURVEY's latest §8.N header counts match Registry.all") {
     // the judge cross-checks the SURVEY round-header counts every round;
     // stale prose has been flagged twice (r7, r8) — make it a failing test

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.{GraftSpec, Tables}
+import graft.{GraftSpec, Posture, Tables}
 import graft.operators.Windows
 
 /** Streaming tests (SURVEY.md §5.3/5.4): append-mode emission after the
@@ -66,7 +66,7 @@ class StreamingSpec extends GraftSpec {
     // disk: the provider the job mains default to for the 100 TB path
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val input = MemoryStream[String]
       val out = StreamingQueries.candlestick(parsedTicks(input))
@@ -198,7 +198,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.{SessionEvent, SessionOut}
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val input = MemoryStream[SessionEvent]
       val out = StreamingQueries.sessionizeTws(spark, input.toDS(),
@@ -223,7 +223,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.DedupDoc
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val dir = java.nio.file.Files.createTempDirectory("graft_dedup_stream").toString
       val base = Seq(
@@ -407,7 +407,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.{DriftEvent, DriftAlarm}
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val (refQ, slackQ, hQ) = (1000L, 50L, 400L) // ref 10.0, slack 0.5, h 4.0
       def ev(k: String, id: Long, t: String, v: Double) = DriftEvent(k, id, ts(t), v)
@@ -609,7 +609,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.{AsofSideEvent, AsofMatched}
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       def ev(u: Long, id: Long, t: String, v: Double) = AsofSideEvent(u, id, ts(t), v)
       // u1: quote tie at 00:00:10 (102 wins), later quote equal to probe 3's
@@ -677,7 +677,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.{FunnelEvent, FunnelStages}
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       def ev(u: Long, t: String, tpe: String) = FunnelEvent(u, tpe, ts(t))
       // u1: full funnel inside the window; u2: purchase BEFORE the click
@@ -1009,7 +1009,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.FillEvent
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
     val w = 15 * 60 // bucket width in seconds
     def ev(t: String, off: Int, v: Double) =
@@ -1069,7 +1069,7 @@ class StreamingSpec extends GraftSpec {
     // MapState -> RocksDB, like the mains
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val capacity = 16
       val nShards = 4
@@ -1123,7 +1123,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.FillEvent
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val dir = java.nio.file.Files.createTempDirectory("graft_gfr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
@@ -1201,7 +1201,7 @@ class StreamingSpec extends GraftSpec {
     // it — the recovery contract of an ingest-time image dedup
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val dir = java.nio.file.Files.createTempDirectory("graft_phr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
@@ -1255,7 +1255,7 @@ class StreamingSpec extends GraftSpec {
   test("heavy-hitter summaries survive a checkpoint restart") {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val dir = java.nio.file.Files.createTempDirectory("graft_hhr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
@@ -1330,7 +1330,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.FillEvent
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val w = 15 * 60
       def ev(t: String, off: Int, v: Double) =
@@ -1472,7 +1472,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.EwmaEvent
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val input = MemoryStream[EwmaEvent]
       val out = StreamingQueries.runningEwmaTws(spark, input.toDS())
@@ -1509,7 +1509,7 @@ class StreamingSpec extends GraftSpec {
     import StreamingQueries.EwmaEvent
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val ckpt = java.nio.file.Files.createTempDirectory("tws-ttl").toString
       val input = MemoryStream[EwmaEvent]
@@ -1564,7 +1564,7 @@ class StreamingSpec extends GraftSpec {
       "flush" -> Scd2Event(99L, ts("2024-01-10 00:00:00"), 90L, "PX"))
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val input = MemoryStream[Scd2Event]
       val out = StreamingQueries.scd2Stream(
@@ -1910,7 +1910,7 @@ class StreamingSpec extends GraftSpec {
       java.sql.Timestamp.valueOf(times(id)))
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val input = MemoryStream[SimhashDoc]
       val out = StreamingQueries.simhashPairsStream(spark, input.toDS()).toDF()
@@ -1961,7 +1961,7 @@ class StreamingSpec extends GraftSpec {
       java.sql.Timestamp.valueOf(times(id)))
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
+    spark.conf.set(key, Posture.RocksDbProvider)
     try {
       val input = MemoryStream[SimhashDoc]
       val out = StreamingQueries.phashPairsStream(spark, input.toDS()).toDF()
