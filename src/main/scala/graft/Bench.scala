@@ -125,10 +125,16 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
-    def timed(fn: (SparkSession, String) => DataFrame): Option[Double] = {
+    // Failed reps per query (cold + warm), emitted as `failed_reps`: a
+    // rep that throws drops out of the min, so a query that failed some
+    // of its reps would otherwise look exactly like a clean one.
+    val failedReps = scala.collection.mutable.Map.empty[String, Int]
+      .withDefaultValue(0)
+    def timed(name: String, fn: (SparkSession, String) => DataFrame)
+        : Option[Double] = {
       val t0 = System.nanoTime()
       try { exec(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case NonFatal(_) => None }
+      catch { case NonFatal(_) => failedReps(name) += 1; None }
       finally reclaim()
     }
     // One-time store builds (the mutation half of the CDC lifecycle
@@ -161,7 +167,7 @@ object Bench {
     val acc = scala.collection.mutable.LinkedHashMap(
       qseq.map { case (name, _) => name -> Vector.empty[Double] }: _*)
     for (_ <- 1 to reps; (name, fn) <- qseq if !setupFailed(name))
-      timed(fn).foreach(t => acc(name) = acc(name) :+ t)
+      timed(name, fn).foreach(t => acc(name) = acc(name) :+ t)
     // middle control: between the cold passes and the warm phase, so a
     // load shift inside either phase is attributable from the JSON alone
     val calMidReps = calibration(spark)
@@ -169,7 +175,7 @@ object Bench {
     val accWarm = scala.collection.mutable.LinkedHashMap(
       qseq.map { case (name, _) => name -> Vector.empty[Double] }: _*)
     for ((name, fn) <- qseq if !setupFailed(name); _ <- 1 to warmReps)
-      timed(fn).foreach(t => accWarm(name) = accWarm(name) :+ t)
+      timed(name, fn).foreach(t => accWarm(name) = accWarm(name) :+ t)
     def minsOf(m: scala.collection.Map[String, Vector[Double]]): Seq[(String, Double)] =
       qseq.map { case (k, _) =>
         k -> m(k).minOption.getOrElse(-1.0)
@@ -249,13 +255,16 @@ object Bench {
     // total line both before streaming (kill-proof) and last (tail-window-
     // proof; the driver's tail-parse tolerates multiple lines).
     println(s"""{"metric":"total","value":$total,"unit":"sec","total_warm":$totalWarm,"setup_total":$setupTotal,"stats_s":$statsS,$calJson,"queries":${obj(mins)},"queries_warm":${obj(minsWarm)},"setup_s":${obj(setupTimes)},"families":${famObj(mins)},"families_warm":${famObj(minsWarm)},"reps_all":${objArr(acc)},"reps_warm_all":${objArr(accWarm)},"env":${env(loadMid)},"sf":"$sfDir","reps":$reps,"warm_reps":$warmReps,"action":"noop-write","excluded":$excluded}""")
+    def failedObj: String = qseq.map { case (k, _) =>
+      s"\"" + k + "\":" + failedReps(k)
+    }.mkString("{", ",", "}")
     // The FINAL line must also carry the per-query maps: the driver tail-
     // parses the LAST JSON line only, and r17/r18's short headline left
     // its per-query/scaling channels empty (PERF per_query: {}). Same
     // fields as the first full line, additions-only — totals and the
     // early line are unchanged, so cross-round comparisons stay valid.
     def headline(): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_warm":$totalWarm,"setup_total":$setupTotal,"stats_s":$statsS,$calJson,"sf":"$sfDir","reps":$reps,"warm_reps":$warmReps,"action":"noop-write","nqueries":${mins.size},"queries":${obj(mins)},"queries_warm":${obj(minsWarm)},"setup_s":${obj(setupTimes)},"families":${famObj(mins)},"env":${env(loadAvg)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_warm":$totalWarm,"setup_total":$setupTotal,"stats_s":$statsS,$calJson,"sf":"$sfDir","reps":$reps,"warm_reps":$warmReps,"action":"noop-write","nqueries":${mins.size},"queries":${obj(mins)},"queries_warm":${obj(minsWarm)},"setup_s":${obj(setupTimes)},"families":${famObj(mins)},"failed_reps":$failedObj,"env":${env(loadAvg)}}"""
     println(headline())
     Console.out.flush()
     // Optional deadline (seconds, from process start): when the elapsed

@@ -67,7 +67,7 @@ object ExtensionQueries {
         FROM documents
        WHERE lang IN ('de', 'fr') AND doc_id % 13 = 0)"""
 
-  /** Oracle twin of [[graft.operators.Cdc.zorderCommit]]'s clustering
+  /** Oracle twin of the [[graft.operators.Cdc.zorder]] layout's clustering
     * key over the day-2 corpus state: exact 16-bit quantization over
     * the state's (doc_id, n_chars) bounds, the magic-number Morton
     * interleave ladder, top-8-bit bucket — identical BIGINT arithmetic
@@ -99,7 +99,7 @@ object ExtensionQueries {
     zk AS (SELECT lang, doc_id, n_chars,
                   (sa | (sb << 1)) >> 24 AS zbucket FROM zm4)"""
 
-  /** Oracle twin of [[graft.operators.Cdc.zorderEquiDepthCommit]]'s
+  /** Oracle twin of the [[graft.operators.Cdc.zorderEd]] layout's
     * rank-quantized clustering key: row_number over doc_id (unique, so
     * it equals the engine's grid-computed rank), rank() over n_chars
     * (tie-min — value-pure, matching the engine's value-level prefix
@@ -6099,7 +6099,8 @@ object ExtensionQueries {
     // ~15% of a partition's files instead of all of them.
     QuerySpec(
       "io_cdc_zonemap_read",
-      (s, dir) => Cdc.zonemapRead(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.bandRead(s, docs(s, dir), scratchPath("zone", dir), 2,
+        Seq("doc_id"), skip = true),
       setup = Some((s, dir) =>
         Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir))),
       oracle = Some("WITH " + cdcFinal2Cte + """,
@@ -6118,7 +6119,8 @@ object ExtensionQueries {
     // oracle SQL — the baseline the zone-mapped read must hash-equal.
     QuerySpec(
       "io_cdc_zonemap_full",
-      (s, dir) => Cdc.zonemapReadFull(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.bandRead(s, docs(s, dir), scratchPath("zone", dir), 2,
+        Seq("doc_id"), skip = false),
       setup = Some((s, dir) =>
         Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir))),
       oracle = Some("WITH " + cdcFinal2Cte + """,
@@ -6143,7 +6145,8 @@ object ExtensionQueries {
     // manifest stats, and the admit arithmetic all at once.
     QuerySpec(
       "io_cdc_zonemap_gauge",
-      (s, dir) => Cdc.zonemapGauge(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.layoutGauge(s, docs(s, dir), scratchPath("zone", dir),
+        Cdc.zedLayouts.take(1), Seq("doc_id")).drop("layout"),
       setup = Some((s, dir) =>
         Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir))),
       oracle = Some("WITH " + cdcFinal2Cte + """,
@@ -6180,7 +6183,7 @@ object ExtensionQueries {
       "io_cdc_optimize",
       (s, dir) => Cdc.optimizeManifest(s, docs(s, dir), scratchPath("zone", dir)),
       setup = Some((s, dir) =>
-        Cdc.optimizedStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 3)),
       oracle = Some("WITH " + cdcFinal2Cte + """,
         st AS (
           SELECT lang, COUNT(*) AS n_docs,
@@ -6203,9 +6206,10 @@ object ExtensionQueries {
     // hash match is the no-false-negatives proof on the evolved key.
     QuerySpec(
       "io_cdc_resort_read",
-      (s, dir) => Cdc.resortRead(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.bandRead(s, docs(s, dir), scratchPath("zone", dir), 4,
+        Seq("n_chars"), skip = true),
       setup = Some((s, dir) =>
-        Cdc.resortStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 4)),
       oracle = Some("WITH " + cdcFinal2Cte + """,
         nb AS (SELECT (max(n_chars) * 25) // 100 AS nlo,
                       (max(n_chars) * 40) // 100 AS nhi FROM documents)
@@ -6222,9 +6226,10 @@ object ExtensionQueries {
     // oracle SQL.
     QuerySpec(
       "io_cdc_resort_full",
-      (s, dir) => Cdc.resortReadFull(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.bandRead(s, docs(s, dir), scratchPath("zone", dir), 4,
+        Seq("n_chars"), skip = false),
       setup = Some((s, dir) =>
-        Cdc.resortStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 4)),
       oracle = Some("WITH " + cdcFinal2Cte + """,
         nb AS (SELECT (max(n_chars) * 25) // 100 AS nlo,
                       (max(n_chars) * 40) // 100 AS nhi FROM documents)
@@ -6244,9 +6249,10 @@ object ExtensionQueries {
     // recomputes every file's zone map from state + the roll rule.
     QuerySpec(
       "io_cdc_resort_gauge",
-      (s, dir) => Cdc.resortGauge(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.layoutGauge(s, docs(s, dir), scratchPath("zone", dir),
+        Cdc.zedLayouts.take(2), Seq("n_chars")),
       setup = Some((s, dir) =>
-        Cdc.resortStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 4)),
       oracle = Some("WITH " + cdcFinal2Cte + """,
         nb AS (SELECT (max(n_chars) * 25) // 100 AS nlo,
                       (max(n_chars) * 40) // 100 AS nhi FROM documents),
@@ -6288,9 +6294,10 @@ object ExtensionQueries {
     // no-false-negatives proof on the multi-dimensional key.
     QuerySpec(
       "io_cdc_zorder_read",
-      (s, dir) => Cdc.zorderRead(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.bandRead(s, docs(s, dir), scratchPath("zone", dir), 5,
+        Seq("doc_id", "n_chars"), skip = true),
       setup = Some((s, dir) =>
-        Cdc.zorderStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 5)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + """
         SELECT lang, COUNT(*) AS n_docs,
                CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
@@ -6304,9 +6311,10 @@ object ExtensionQueries {
 
     QuerySpec(
       "io_cdc_zorder_full",
-      (s, dir) => Cdc.zorderReadFull(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.bandRead(s, docs(s, dir), scratchPath("zone", dir), 5,
+        Seq("doc_id", "n_chars"), skip = false),
       setup = Some((s, dir) =>
-        Cdc.zorderStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 5)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + """
         SELECT lang, COUNT(*) AS n_docs,
                CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
@@ -6330,9 +6338,10 @@ object ExtensionQueries {
     // chunking, and admit arithmetic in SQL.
     QuerySpec(
       "io_cdc_zorder_gauge",
-      (s, dir) => Cdc.zorderCdcGauge(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.layoutGauge(s, docs(s, dir), scratchPath("zone", dir),
+        Cdc.zedLayouts.take(3), Seq("doc_id", "n_chars")),
       setup = Some((s, dir) =>
-        Cdc.zorderStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 5)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + "," +
         zcdcCtes + """,
         r2 AS (SELECT lang, doc_id, n_chars,
@@ -6388,9 +6397,10 @@ object ExtensionQueries {
     // no-false-negatives proof on the rank-quantized layout).
     QuerySpec(
       "io_cdc_zorder_ed_read",
-      (s, dir) => Cdc.zorderEdRead(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.bandRead(s, docs(s, dir), scratchPath("zone", dir), 6,
+        Seq("doc_id", "n_chars"), skip = true),
       setup = Some((s, dir) =>
-        Cdc.zorderEdStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 6)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + """
         SELECT lang, COUNT(*) AS n_docs,
                CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
@@ -6410,9 +6420,10 @@ object ExtensionQueries {
     // arithmetic in SQL.
     QuerySpec(
       "io_cdc_zorder_ed_gauge",
-      (s, dir) => Cdc.zorderEdCdcGauge(s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.layoutGauge(s, docs(s, dir), scratchPath("zone", dir),
+        Cdc.zedLayouts, Seq("doc_id", "n_chars")),
       setup = Some((s, dir) =>
-        Cdc.zorderEdStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 6)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + "," +
         zcdcCtes + "," + zcdcEdCtes + "," + zcdcLayoutChunksCtes + """
         SELECT layout, lang, COUNT(*) AS files_total,
@@ -6443,7 +6454,7 @@ object ExtensionQueries {
       "io_cdc_layout_advise",
       (s, dir) => Cdc.layoutAdvice(s, docs(s, dir), scratchPath("zone", dir)),
       setup = Some((s, dir) =>
-        Cdc.zorderEdStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 6)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + "," +
         zcdcCtes + "," + zcdcEdCtes + "," + zcdcLayoutChunksCtes + """,
         adv AS (
@@ -6475,7 +6486,7 @@ object ExtensionQueries {
       (s, dir) => Cdc.layoutAdviceMixed(
         s, docs(s, dir), scratchPath("zone", dir)),
       setup = Some((s, dir) =>
-        Cdc.zorderEdStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 6)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + "," +
         zcdcCtes + "," + zcdcEdCtes + "," + zcdcLayoutChunksCtes + """,
         adv AS (
@@ -6511,7 +6522,7 @@ object ExtensionQueries {
       (s, dir) => Cdc.layoutAdviceLogged(
         s, docs(s, dir), scratchPath("zone", dir)),
       setup = Some((s, dir) =>
-        Cdc.zorderEdStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 6)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + "," +
         zcdcCtes + "," + zcdcEdCtes + "," + zcdcLayoutChunksCtes + """,
         adv AS (
@@ -6547,10 +6558,10 @@ object ExtensionQueries {
     // and hashed. The oracle inlines the 3× multiplier into the replay.
     QuerySpec(
       "io_cdc_layout_advise_weighted",
-      (s, dir) => Cdc.layoutAdviceWeighted(
-        s, docs(s, dir), scratchPath("zone", dir)),
+      (s, dir) => Cdc.layoutAdviceLogged(
+        s, docs(s, dir), scratchPath("zone", dir), docIdReps = 3),
       setup = Some((s, dir) =>
-        Cdc.zorderEdStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 6)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + "," +
         zcdcCtes + "," + zcdcEdCtes + "," + zcdcLayoutChunksCtes + """,
         adv AS (
@@ -6624,7 +6635,7 @@ object ExtensionQueries {
         Cdc.layoutAdvice(s, docs(s, dir), scratchPath("zone", dir)),
         current = "zorder_ed", nReplays = 1L),
       setup = Some((s, dir) =>
-        Cdc.zorderEdStore(s, docs(s, dir), scratchPath("zone", dir))),
+        Cdc.zonedStore(s, docs(s, dir), scratchPath("zone", dir), 6)),
       oracle = Some("WITH " + cdcFinal2Cte + "," + zcdcBands + "," +
         zcdcCtes + "," + zcdcEdCtes + "," + zcdcLayoutChunksCtes + """,
         adv AS (

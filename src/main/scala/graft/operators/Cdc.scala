@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Change-data-capture maintenance of a partitioned corpus snapshot —
@@ -775,9 +775,8 @@ object Cdc {
   def versionedInit(
       spark: SparkSession, docs: DataFrame, root: String,
       zoneRows: Int = 0): Unit = {
-    writeData(docs.select(storeCols.map(col): _*), s"$root/d0", zoneRows)
-    writeManifest(manifestEntries(spark, s"$root/d0",
-      dataLangs(spark, s"$root/d0")), s"$root/m/v=0")
+    writeLayout(spark, docs.select(storeCols.map(col): _*), root, 0,
+      zoneRows, byDocId)
   }
 
   /** Read the store AS OF a version: the manifest names the files, the
@@ -785,19 +784,18 @@ object Cdc {
     * about later versions is visible — old manifests keep pointing at
     * their files, which commits never mutate (copy-on-write + rename).
     * `langs` prunes the MANIFEST read itself (only those partitions'
-    * metadata is listed or collected); `idRange` additionally admits
-    * only files whose doc_id zone map overlaps [lo, hi] — zone maps
-    * have no false negatives, so with the exact predicate re-applied on
-    * top the skipped read is hash-identical to the full one.
+    * metadata is listed or collected); `bands` additionally admits only
+    * files whose zone map overlaps every (column, lo, hi) band — zone
+    * maps have no false negatives, so with the exact predicate
+    * re-applied on top the skipped read is hash-identical to the full
+    * one.
     */
   def readVersion(
       spark: SparkSession, root: String, v: Int,
       langs: Seq[String] = Nil,
-      idRange: Option[(Long, Long)] = None,
-      statRange: Option[(String, Long, Long)] = None,
+      bands: Seq[(String, Long, Long)] = Nil,
       workloadLog: Option[(String, Long)] = None): DataFrame =
-    readManifest(spark, s"$root/m/v=$v", langs, idRange, statRange,
-      workloadLog)
+    readManifest(spark, s"$root/m/v=$v", langs, bands, workloadLog)
 
   /** The manifest TABLE of a version/branch, optionally pruned to a
     * lang subset — the partition predicate reaches the manifest's own
@@ -815,20 +813,13 @@ object Cdc {
     * or a staged WAP branch): the manifest names the files, the scan
     * unions one pruned file-list read per partition value. The driver
     * collects ONLY the pruned partitions' file groups (and, under
-    * `idRange`, only the zone-map-admitted files of those).
+    * `bands`, only the zone-map-admitted files of those).
     */
   def readManifest(
       spark: SparkSession, manifestPath: String,
       langs: Seq[String] = Nil,
-      idRange: Option[(Long, Long)] = None,
-      statRange: Option[(String, Long, Long)] = None,
+      bands: Seq[(String, Long, Long)] = Nil,
       workloadLog: Option[(String, Long)] = None): DataFrame = {
-    // every stat predicate admits only files whose recorded [min, max]
-    // overlaps the band — no false negatives by construction, so any
-    // zone-mapped column can prune (doc_id via idRange; n_chars once a
-    // resort commit makes its ranges tight, see [[resortCommit]])
-    val bands = idRange.map { case (lo, hi) => ("doc_id", lo, hi) }.toSeq ++
-      statRange.toSeq
     // WORKLOAD CAPTURE (r18): when a log sink is given, record the band
     // predicates this read actually issues — (query id, column, lo, hi),
     // a few rows per read, appended before any data is touched — so the
@@ -846,10 +837,8 @@ object Cdc {
           .write.mode("append").parquet(logDir)
       }
     }
-    val pruned = bands.foldLeft(manifestFrame(spark, manifestPath, langs)) {
-      case (m, (c, lo, hi)) =>
-        m.where(col(s"max_$c") >= lo && col(s"min_$c") <= hi)
-    }
+    val m = manifestFrame(spark, manifestPath, langs)
+    val pruned = if (bands.isEmpty) m else m.where(admits(bands))
     val manifest = pruned.select("lang", "path")
       .collect().map(r => r.getString(0) -> r.getString(1))
     if (manifest.isEmpty)
@@ -867,18 +856,15 @@ object Cdc {
     // literal: a 3-version manifest query ran 15 scans where this runs
     // 3. The join, not a `lang=` path regex, because RTBF replacement
     // files live under `purge/fidx=N/` — only the manifest knows their
-    // partition. BOTH sides normalize through the SAME pattern
-    // ([[scanPathNormRe]]): the r18 form regex-stripped the scheme on
-    // the scan side but URI.getPath'd the manifest side, which drops
-    // the authority — on `s3a://bucket/…` the two sides disagree and an
-    // inner join would silently return ZERO rows. One textual pattern
-    // on both sides removes the divergence, and the left join below
+    // partition. BOTH sides reduce to the same key ([[scanKey]] on the
+    // manifest's raw paths, the same [[scanPathNormRe]] strip on the
+    // scan's URL-encoded `input_file_name`), and the left join below
     // turns any residual mismatch into a loud per-row error instead of
     // silent row loss (no extra pass — the null check rides the join's
     // own projection).
     import spark.implicits._
     val pathLang = manifest
-      .map { case (l, p) => (normalizeScanPath(p), l) }
+      .map { case (l, p) => (scanKey(p), l) }
       .toSeq.toDF("__p", "__mlang")
     spark.read.parquet(manifest.map(_._2).sorted: _*)
       .withColumn("__p",
@@ -890,6 +876,17 @@ object Cdc {
         col("__p")))))
       .drop("__p", "__mlang")
   }
+
+  /** The zone-map admission test of a conjunction of (column, lo, hi)
+    * bands: a file is admitted iff its recorded [min, max] of every
+    * band's column overlaps the band — no false negatives by
+    * construction. The one overlap rule behind manifest pruning, the
+    * skipping gauges and the layout advisor.
+    */
+  private def admits(bands: Seq[(String, Long, Long)]): Column =
+    bands.map { case (c, lo, hi) =>
+      col(s"max_$c") >= lo && col(s"min_$c") <= hi
+    }.reduce(_ && _)
 
   /** The ONE scan-path normalizer of the as-of read: strips
     * `scheme:` / `scheme://authority` so `file:/a`, `file:///a`, and
@@ -904,6 +901,15 @@ object Cdc {
 
   private[graft] def normalizeScanPath(p: String): String =
     p.replaceFirst(scanPathNormRe, "")
+
+  /** The join key of a RAW manifest path (Hadoop `Path.toString`, as
+    * written at commit): URL-encoded the way Spark's scan reports
+    * `input_file_name` (a space becomes `%20`, a literal `%` `%25`),
+    * then normalized — so a store root holding such characters keys
+    * identically on both sides. Driver-side, O(files).
+    */
+  private[graft] def scanKey(p: String): String =
+    normalizeScanPath(org.apache.spark.paths.SparkPath.fromPathString(p).urlEncoded)
 
   /** Commit version `toV` on top of `fromV`: apply one day's rules to
     * the as-of dirty-partition view, write ONLY the rewritten partitions
@@ -1526,7 +1532,6 @@ object Cdc {
       spark: SparkSession, root: String, versions: Seq[Int],
       purgeMod: Long, purgeRes: Long): Unit = {
     import spark.implicits._
-    def norm(s: String): String = new java.net.URI(s).getPath
     val conf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
     val manifests: Seq[(Int, DataFrame)] = versions.map { v =>
@@ -1539,41 +1544,43 @@ object Cdc {
     val distinctPaths = manifests.map(_._2.select("path"))
       .reduce(_ unionByName _).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
+    // scanned files key back to their manifest paths through the as-of
+    // read's shared key ([[scanKey]]) — the one scan/manifest path
+    // mapping, whatever characters the root or the URI scheme carry
     val affected: Set[String] = spark.read.parquet(distinctPaths: _*)
       .where(col("doc_id") % purgeMod === purgeRes)
       .select(input_file_name()).distinct()
-      .collect().map(r => norm(r.getString(0))).toSet
+      .collect().map(r => normalizeScanPath(r.getString(0))).toSet
     // rewrite ALL affected files in ONE job: rows keyed back to their
-    // source file (dir/name is unique — one write job never emits two
-    // files with the same part index, distinct jobs have distinct UUIDs),
-    // repartitioned so each replacement directory gets exactly one file.
-    // A fully-purged file yields no output directory and its manifest
-    // entries simply drop — the data is gone, so is the pointer.
-    def tail2(p: String): String = p.split('/').takeRight(2).mkString("/")
-    val affectedPaths = distinctPaths.filter(p => affected(norm(p))).sorted
-    val key2idx: Map[String, Int] = affectedPaths.map(tail2).zipWithIndex.toMap
-    require(key2idx.size == affectedPaths.size,
-      "ambiguous dir/name file keys in the purge rewrite")
+    // source file, repartitioned so each replacement directory gets
+    // exactly one file. A fully-purged file yields no output directory
+    // and its manifest entries simply drop — the data is gone, so is the
+    // pointer.
+    val (affectedPaths, affectedKeys) = distinctPaths
+      .map(p => (p, scanKey(p))).filter { case (_, k) => affected(k) }.unzip
+    require(affectedKeys.distinct.size == affectedKeys.size,
+      "ambiguous scan keys in the purge rewrite")
     if (affectedPaths.nonEmpty) {
       // broadcast-joined key table, not a literal map expression: at
       // corpus scale the affected-file list is hundreds of entries and a
       // giant literal would trip the 64 KB codegen fallback
-      val keys = affectedPaths.map(p => (tail2(p), key2idx(tail2(p))))
-        .toDF("fkey", "fidx")
+      val keys = affectedKeys.zipWithIndex.toDF("__p", "fidx")
       spark.read.parquet(affectedPaths: _*)
         .where(col("doc_id") % purgeMod =!= purgeRes)
-        .withColumn("fkey",
-          regexp_extract(input_file_name(), "([^/]+/[^/]+)$", 1))
-        .join(broadcast(keys), Seq("fkey")).drop("fkey")
+        .withColumn("__p",
+          regexp_replace(input_file_name(), scanPathNormRe, ""))
+        .join(broadcast(keys), Seq("__p")).drop("__p")
         .repartition(col("fidx"))
         .write.mode("overwrite").partitionBy("fidx").parquet(s"$root/purge")
     }
     // old→new path substitution per manifest, as a broadcast join of the
-    // purge-bounded rename table against each manifest TABLE: affected &
-    // rewritten rows substitute, affected & fully-purged rows drop,
-    // untouched rows carry verbatim. The driver holds only the rename
-    // table (|affected| rows); manifests are read, joined, checkpointed
-    // (the read-then-overwrite barrier) and rewritten engine-side.
+    // purge-bounded rename table against each manifest TABLE on the
+    // manifest's own `path` (both sides come from the manifests, so the
+    // raw strings match): affected & rewritten rows substitute, affected
+    // & fully-purged rows drop, untouched rows carry verbatim. The driver
+    // holds only the rename table (|affected| rows); manifests are read,
+    // joined, checkpointed (the read-then-overwrite barrier) and
+    // rewritten engine-side.
     // fresh zone maps for the replacement files (one pruned read of the
     // purge output, |affected| rows) — the rewritten files shrank, so
     // their manifest stats are recomputed rather than carried stale
@@ -1590,24 +1597,22 @@ object Cdc {
             r.getLong(5))))
         .toMap
     val renames: Seq[(String, String, Int, Long, Long, Long, Long, Long)] =
-      affectedPaths.map { p =>
-        val idx = key2idx(tail2(p))
+      affectedPaths.zipWithIndex.map { case (p, idx) =>
         val np = partFiles(spark, s"$root/purge/fidx=$idx")
           .headOption.orNull
         val (mn, mx, mnc, mxc, n) =
           newStats.getOrElse(idx, (0L, 0L, 0L, 0L, 0L))
-        (norm(p), np, 1, mn, mx, mnc, mxc, n)
+        (p, np, 1, mn, mx, mnc, mxc, n)
       }
     affectedPaths.foreach(p =>
       fs.delete(new org.apache.hadoop.fs.Path(p), false))
     if (renames.nonEmpty) {
-      val renDf = renames.toDF("npath", "new_path", "hit",
+      val renDf = renames.toDF("path", "new_path", "hit",
         "nw_min_doc_id", "nw_max_doc_id", "nw_min_n_chars",
         "nw_max_n_chars", "nw_n_rows")
       manifests.foreach { case (v, m) =>
         val rewritten = m
-          .withColumn("npath", regexp_replace(col("path"), "^file:", ""))
-          .join(broadcast(renDf), Seq("npath"), "left")
+          .join(broadcast(renDf), Seq("path"), "left")
           .where(col("hit").isNull || col("new_path").isNotNull)
           .select(col("lang"),
             coalesce(col("new_path"), col("path")).as("path"),
@@ -1754,403 +1759,78 @@ object Cdc {
 
   // ---- zone-mapped reads (file-level data skipping) ---------------------
 
-  /** The doc_id band the zone-map queries select: the middle
-    * [25%, 40%] of the base corpus id range, computed from the corpus
-    * with integer arithmetic (one scalar agg — both engines run the
-    * same subquery), so the predicate scales with the SF instead of
-    * going stale as a constant.
+  /** The (column, lo, hi) band the zone-map queries select on a store
+    * column: the middle [25%, 40%] of the base corpus's range of that
+    * column, computed from the corpus with integer arithmetic (one
+    * scalar agg — both engines run the same subquery), so the predicate
+    * scales with the SF instead of going stale as a constant.
     */
-  def zoneBand(docs: DataFrame): (Long, Long) = {
-    val mx = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    ((mx * 25L) / 100L, (mx * 40L) / 100L)
+  def band(docs: DataFrame, column: String): (String, Long, Long) = {
+    val mx = docs.agg(max(col(column))).head.getLong(0)
+    (column, (mx * 25L) / 100L, (mx * 40L) / 100L)
   }
 
-  /** Three-version store committed with ZONED data files: rows sorted by
-    * (lang, doc_id) and rolled to a new file every [[defaultZoneRows]]
-    * records, manifests carrying each file's zone map. File boundaries
-    * are thereby a deterministic function of the committed state —
-    * file k of a partition holds its k-th sorted run — which is what
-    * lets the DuckDB oracle reproduce the per-file zone maps and
-    * hash-check the skipping gauge, not just the skipped read.
+  /** One file layout of the zoned store: the label the gauges and the
+    * advisor report, the total within-lang sort order the zoned write
+    * rolls files along (every order ends in the unique doc_id, so file
+    * boundaries are a deterministic function of state and the DuckDB
+    * oracle replays every layout's chunking), and the keying function
+    * that attaches any clustering column the sort names (never stored —
+    * the write projects the store columns).
     */
-  def zonedStore(
-      spark: SparkSession, docs: DataFrame, scratch: String): Unit =
-    buildOnce(spark, scratch, s"$scratch/m/v=2") {
-      versionedInit(spark, docs, scratch, defaultZoneRows)
-      versionedMerge(spark, scratch, 0, 1, day1Rules, dirtyLangs,
-        defaultZoneRows)
-      versionedMerge(spark, scratch, 1, 2, day2Rules, dirtyLangs,
-        defaultZoneRows)
-    }
+  final case class Layout(
+      label: String, sortCols: Seq[String], keyed: DataFrame => DataFrame)
 
-  /** Zone-map-SKIPPED as-of read: the v2 manifest's per-file
-    * min/max doc_id admits only the files whose range overlaps the
-    * band, the exact predicate re-applies on top (zone maps have no
-    * false negatives, the predicate rejects anything extra an admitted
-    * file carries), and the result manifests per lang. Shares its
-    * oracle SQL with [[zonemapReadFull]] — the hash match IS the proof
-    * that file skipping changed nothing. At 100 TB this is the
-    * difference between opening every file of a partition and opening
-    * the ~15% whose zone overlaps the predicate.
-    */
-  def zonemapRead(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zonedStore(spark, docs, scratch)
-    val (lo, hi) = zoneBand(docs)
-    Governance.releaseManifestBy(
-      readVersion(spark, scratch, 2, Nil, Some((lo, hi)))
-        .where(col("doc_id").between(lo, hi)),
-      "lang")
-  }
-
-  /** The unskipped twin: full v2 file list, same exact predicate — the
-    * baseline [[zonemapRead]] must hash-equal.
-    */
-  def zonemapReadFull(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zonedStore(spark, docs, scratch)
-    val (lo, hi) = zoneBand(docs)
-    Governance.releaseManifestBy(
-      readVersion(spark, scratch, 2)
-        .where(col("doc_id").between(lo, hi)),
-      "lang")
-  }
-
-  /** Data-skipping gauge over the v2 manifest's zone maps (the
-    * [[graft.operators.StorageLayout.zorderSkippingGauge]] discipline
-    * applied to the CDC store): per lang, how many FILES the band
-    * predicate admits vs total, how many rows those files force the
-    * scan to read vs the partition's total, and the skipped share in
-    * basis points. Pure manifest arithmetic — O(files) rows, the
-    * corpus is never read — and because the zoned layout's file
-    * boundaries are deterministic, the DuckDB oracle recomputes the
-    * same numbers from the v2 state + the chunking rule.
-    */
-  def zonemapGauge(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zonedStore(spark, docs, scratch)
-    val (lo, hi) = zoneBand(docs)
-    manifestFrame(spark, s"$scratch/m/v=2")
-      .select(col("lang"),
-        (col("max_doc_id") >= lo && col("min_doc_id") <= hi).as("admitted"),
-        col("n_rows"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("files_total"),
-        sum(when(col("admitted"), 1L).otherwise(0L)).as("files_admitted"),
-        sum(when(col("admitted"), col("n_rows")).otherwise(0L))
-          .as("rows_scanned"),
-        sum(col("n_rows")).as("rows_total"))
-      .withColumn("skip_bp",
-        expr("(rows_total - rows_scanned) * 10000 div rows_total"))
-  }
-
-  /** OPTIMIZE — bin-pack a version's small files into fewer, larger
-    * sorted ones AS A NEW COMMIT: v(toV)'s state is bit-identical to
-    * v(fromV)'s (rewrite-only, nothing inserted/deleted/updated), its
-    * data files are the same (lang, doc_id)-sorted runs rolled at a
-    * LARGER size, and its manifest carries freshly computed zone maps.
-    * Modeling compaction as a commit keeps every invariant the store
-    * already has: v(fromV) keeps reading its own small files (snapshot
-    * isolation), vacuum's manifest-row refcount reclaims them when the
-    * old version expires, and readers switch atomically. This closes
-    * the small-files tax the fine-grained zoned layout pays for its
-    * oracle-reproducible skipping: at 100 TB, ingest commits land many
-    * small sorted files per partition and a background OPTIMIZE
-    * re-rolls them — file count drops ~zoneRows/targetRows while every
-    * read and every zone-map skip stays correct.
-    */
-  def optimizeCommit(
-      spark: SparkSession, root: String, fromV: Int, toV: Int,
-      targetRows: Int): Unit = {
-    // no outer checkpoint: writeData materializes its input once for the
-    // zoned path, and lang discovery is an FS listing of the written dirs
-    val cur = readVersion(spark, root, fromV)
-      .select("doc_id", "text", "lang", "source", "n_chars")
-    writeData(cur, s"$root/d$toV", targetRows)
-    writeManifest(manifestEntries(spark, s"$root/d$toV",
-      dataLangs(spark, s"$root/d$toV")), s"$root/m/v=$toV")
-  }
-
-  /** Registered OPTIMIZE query: the zoned store's v2 (128-row files)
-    * compacted into v3 (512-row files), read back per lang WITH the
-    * before/after file counts beside the state checksum — one hash
-    * proves (a) compaction changed no row (same n_docs / sum_chars /
-    * fp_xor the time-travel v2 leg pins), (b) the deterministic
-    * re-chunking landed exactly ceil(n/512) files per lang, and (c) the
-    * 128-row layout it replaced had its own deterministic count — the
-    * oracle recomputes BOTH chunkings from the corpus state.
-    */
-  def optimizeManifest(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    optimizedStore(spark, docs, scratch)
-    val counts = manifestFrame(spark, s"$scratch/m/v=2")
-      .groupBy(col("lang")).agg(count(lit(1)).as("files_before"))
-      .join(manifestFrame(spark, s"$scratch/m/v=3")
-        .groupBy(col("lang")).agg(count(lit(1)).as("files_after")),
-        Seq("lang"))
-    Governance.releaseManifestBy(readVersion(spark, scratch, 3), "lang")
-      .join(counts, Seq("lang"))
-  }
-
-  /** One-time build for [[optimizeManifest]]: the three-version ZONED
-    * store plus the v3 OPTIMIZE commit.
-    */
-  def optimizedStore(
-      spark: SparkSession, docs: DataFrame, scratch: String): Unit =
-    buildOnce(spark, s"$scratch#opt", s"$scratch/m/v=3") {
-      zonedStore(spark, docs, scratch)
-      optimizeCommit(spark, scratch, 2, 3, optimizeTargetRows)
-    }
-
-  /** OPTIMIZE roll size: 4× the ingest zone size — big enough that the
-    * compaction ratio is visible at sf0.01, small enough that sf0.1
-    * still rolls many files per lang.
-    */
-  val optimizeTargetRows: Int = 512
-
-  /** SORT-KEY EVOLUTION as a commit: rewrite a version's files sorted by
-    * (lang, n_chars, doc_id) instead of (lang, doc_id) — state
-    * bit-identical, same roll size, fresh zone maps. The point: zone
-    * maps only skip for predicates CORRELATED with the sort key, so the
-    * store's recorded min/max n_chars were useless under the doc_id
-    * layout (every file's range is wide) and become tight under this
-    * one — which predicates skip is a LAYOUT property, evolved by a
-    * rewrite-only commit exactly like OPTIMIZE, never by rewriting
-    * history (v3 keeps its doc_id-clustered files; readers that filter
-    * on doc_id keep using it until expiry). The doc_id tiebreak keeps
-    * the sort total, so file boundaries stay a deterministic function
-    * of state and the oracle recomputes both layouts' zone maps.
-    */
-  def resortCommit(
-      spark: SparkSession, root: String, fromV: Int, toV: Int,
-      targetRows: Int): Unit = {
-    val cur = readVersion(spark, root, fromV)
-      .select("doc_id", "text", "lang", "source", "n_chars")
-    writeData(cur, s"$root/d$toV", targetRows,
-      Seq("lang", "n_chars", "doc_id"))
-    writeManifest(manifestEntries(spark, s"$root/d$toV",
-      dataLangs(spark, s"$root/d$toV")), s"$root/m/v=$toV")
-  }
-
-  /** One-time build for the resort queries: the zoned store, its v3
-    * OPTIMIZE, then the v4 re-sort commit.
-    */
-  def resortStore(
-      spark: SparkSession, docs: DataFrame, scratch: String): Unit =
-    buildOnce(spark, s"$scratch#resort", s"$scratch/m/v=4") {
-      optimizedStore(spark, docs, scratch)
-      // re-sort at the INGEST roll (128), not the OPTIMIZE roll: the
-      // gauge compares v2 (128-row, doc_id-sorted) against v4 (128-row,
-      // n_chars-sorted) so the layout FLIP is the only variable — a
-      // coarser v4 would confound sort-key evolution with file size
-      resortCommit(spark, scratch, 3, 4, defaultZoneRows)
-    }
-
-  /** The n_chars band the resort queries predicate on: the middle
-    * [25%, 40%] of the ORIGINAL corpus's n_chars range — computed from
-    * the base table so the oracle recomputes it verbatim and it scales
-    * with SF.
-    */
-  def nCharsBand(docs: DataFrame): (Long, Long) = {
-    val mx = docs.agg(max(col("n_chars"))).head.getLong(0)
-    ((mx * 25L) / 100L, (mx * 40L) / 100L)
-  }
-
-  /** Zone-map-SKIPPED n_chars-band read of the RE-SORTED v4: the fresh
-    * manifest's per-file min/max n_chars admits only overlapping files,
-    * exact predicate re-applied on top. Shares its oracle SQL with
-    * [[resortReadFull]] — the hash match proves skipping on the evolved
-    * sort key changed nothing.
-    */
-  def resortRead(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    resortStore(spark, docs, scratch)
-    val (lo, hi) = nCharsBand(docs)
-    Governance.releaseManifestBy(
-      readVersion(spark, scratch, 4,
-          statRange = Some(("n_chars", lo, hi)))
-        .where(col("n_chars").between(lo, hi)),
-      "lang")
-  }
-
-  /** The unskipped twin of [[resortRead]]: full v4 file list, same exact
-    * predicate.
-    */
-  def resortReadFull(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    resortStore(spark, docs, scratch)
-    val (lo, hi) = nCharsBand(docs)
-    Governance.releaseManifestBy(
-      readVersion(spark, scratch, 4)
-        .where(col("n_chars").between(lo, hi)),
-      "lang")
-  }
-
-  /** The sort-key-evolution payoff as a verified number: the SAME
-    * n_chars band priced against BOTH layouts' zone maps at the SAME
-    * 128-row roll — v2 (doc_id-sorted: n_chars ranges wide, nearly
-    * every file admitted) vs v4 (n_chars-sorted: tight ranges, a
-    * band-sized slice admitted). Pure manifest arithmetic, corpus never
-    * read; both chunkings are deterministic so the oracle recomputes
-    * every number.
-    */
-  def resortGauge(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    resortStore(spark, docs, scratch)
-    val (lo, hi) = nCharsBand(docs)
-    Seq(("by_doc_id", 2), ("by_n_chars", 4)).map { case (layout, v) =>
-      manifestFrame(spark, s"$scratch/m/v=$v")
-        .select(col("lang"),
-          (col("max_n_chars") >= lo && col("min_n_chars") <= hi)
-            .as("admitted"),
-          col("n_rows"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("files_total"),
-          sum(when(col("admitted"), 1L).otherwise(0L)).as("files_admitted"),
-          sum(when(col("admitted"), col("n_rows")).otherwise(0L))
-            .as("rows_scanned"),
-          sum(col("n_rows")).as("rows_total"))
-        .withColumn("skip_bp",
-          expr("(rows_total - rows_scanned) * 10000 div rows_total"))
-        .withColumn("layout", lit(layout))
-    }.reduce(_ unionByName _)
-      .select("layout", "lang", "files_total", "files_admitted",
-        "rows_scanned", "rows_total", "skip_bp")
-  }
-
-  /** Z-order bucket resolution for [[zorderCommit]]: 8 bits = 256
-    * Morton cells over the 16-bit quantized (doc_id, n_chars) plane —
-    * finer than any lang's file count at the harness SFs, so the
-    * 128-row roll, not the bucket granularity, sets file boundaries.
+  /** Z-order bucket resolution of the Z layouts: 8 bits = 256 Morton
+    * cells over the 16-bit quantized (doc_id, n_chars) plane — finer
+    * than any lang's file count at the harness SFs, so the 128-row roll,
+    * not the bucket granularity, sets file boundaries.
     */
   val zorderBits: Int = 8
 
-  /** OPTIMIZE ZORDER as a commit: rewrite a version's files clustered
-    * by the Morton interleave of (doc_id, n_chars) — the
-    * multi-dimensional evolution of [[resortCommit]]'s single-key
-    * re-sort. A 1-D sort serves ONE predicate column and abandons the
-    * other ([[resortGauge]] showed exactly that trade); Z-ordering
-    * spends the same rewrite making BOTH columns' zone maps partially
-    * tight, so a 2-D box predicate admits ~the intersected cells
-    * instead of a full band of one dimension. Same commit discipline as
-    * every other maintenance move here: rewrite-only, parent version
-    * untouched, zone maps recomputed at commit; the (zbucket, doc_id)
-    * sort is total, so file boundaries stay a deterministic function of
-    * state and the oracle replays the quantization + Morton ladder +
-    * chunking in SQL.
+  /** The ingest layout: (lang, doc_id)-sorted runs. Re-rolled at a
+    * larger size it is OPTIMIZE — the small-files compaction of the
+    * fine-grained zoned layout (file count drops ~zoneRows/targetRows
+    * while every read and every zone-map skip stays correct).
     */
-  def zorderCommit(
-      spark: SparkSession, root: String, fromV: Int, toV: Int,
-      targetRows: Int): Unit = {
-    val cur = readVersion(spark, root, fromV)
-      .select("doc_id", "text", "lang", "source", "n_chars")
-    // quantization bounds span the whole state (not per lang) — the
-    // oracle recomputes them from the same frame; the range-split zoned
-    // write sorts by the Morton bucket (doc_id tiebreak keeps it total)
-    // and drops the clustering key at the write boundary
-    writeData(StorageLayout.zorderKeyed(cur, "doc_id", "n_chars", zorderBits),
-      s"$root/d$toV", targetRows, Seq("lang", "zbucket", "doc_id"),
-      outCols = storeCols)
-    writeManifest(manifestEntries(spark, s"$root/d$toV",
-      dataLangs(spark, s"$root/d$toV")), s"$root/m/v=$toV")
-  }
+  val byDocId: Layout = Layout("by_doc_id", Seq("lang", "doc_id"), identity)
 
-  /** One-time build for the zorder queries: the resort chain plus the
-    * v5 Z-order commit.
+  /** SORT-KEY EVOLUTION: (lang, n_chars, doc_id). Zone maps only skip
+    * for predicates CORRELATED with the sort key, so the recorded
+    * n_chars ranges are wide under the doc_id layout and tight under
+    * this one — which predicates skip is a LAYOUT property, evolved by a
+    * rewrite-only commit, never by rewriting history.
     */
-  def zorderStore(
-      spark: SparkSession, docs: DataFrame, scratch: String): Unit =
-    buildOnce(spark, s"$scratch#zorder", s"$scratch/m/v=5") {
-      resortStore(spark, docs, scratch)
-      zorderCommit(spark, scratch, 4, 5, defaultZoneRows)
-    }
+  val byNChars: Layout =
+    Layout("by_n_chars", Seq("lang", "n_chars", "doc_id"), identity)
 
-  /** Zone-map-SKIPPED 2-D box read of the Z-ordered v5: BOTH stat pairs
-    * prune (doc_id band via the id zone maps, n_chars band via the size
-    * zone maps), the exact conjunction re-applies on top. Shares its
-    * oracle SQL with [[zorderReadFull]].
+  /** OPTIMIZE ZORDER: clustered by the Morton interleave of min-max
+    * quantized (doc_id, n_chars) — a 1-D sort serves ONE predicate
+    * column and abandons the other; the curve spends the same rewrite
+    * making BOTH columns' zone maps partially tight. Quantization bounds
+    * span the whole state (not per lang), which the oracle recomputes
+    * from the same frame.
     */
-  def zorderRead(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderStore(spark, docs, scratch)
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
-    Governance.releaseManifestBy(
-      readVersion(spark, scratch, 5, idRange = Some((dlo, dhi)),
-          statRange = Some(("n_chars", nlo, nhi)))
-        .where(col("doc_id").between(dlo, dhi) &&
-          col("n_chars").between(nlo, nhi)),
-      "lang")
-  }
+  val zorder: Layout = Layout("zorder", Seq("lang", "zbucket", "doc_id"),
+    StorageLayout.zorderKeyed(_, "doc_id", "n_chars", zorderBits))
 
-  /** The unskipped twin of [[zorderRead]]: full v5 file list, same exact
-    * conjunction.
+  /** OPTIMIZE ZORDER with EQUI-DEPTH quantization
+    * ([[zorderEquiDepthKeyed]]) — the fix for the skew-squashed id space
+    * the min-max curve loses on. The keying is multi-pass over its input
+    * (its rank joins re-read it several times), so it checkpoints the
+    * as-of read first; the zoned write then materializes the KEYED frame
+    * once more so the rank joins run a single time.
     */
-  def zorderReadFull(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderStore(spark, docs, scratch)
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
-    Governance.releaseManifestBy(
-      readVersion(spark, scratch, 5)
-        .where(col("doc_id").between(dlo, dhi) &&
-          col("n_chars").between(nlo, nhi)),
-      "lang")
-  }
+  val zorderEd: Layout = Layout("zorder_ed", Seq("lang", "zbucket", "doc_id"),
+    df => zorderEquiDepthKeyed(df.localCheckpoint(), zorderBits))
 
-  /** The multi-dimensional-clustering DECISION gauge: the SAME 2-D box
-    * priced against all THREE layouts' zone maps at the same 128-row
-    * roll — v2 (by doc_id), v4 (by n_chars), v5 (Z-order). Pure
-    * manifest arithmetic; all three chunkings are total-order
-    * deterministic, so the oracle replays quantization, Morton ladder,
-    * chunking, and admit arithmetic in SQL.
-    *
-    * MEASURED LESSON (the honest result, hash-pinned at both SFs): on
-    * THIS store the Z-order layout loses to both 1-D sorts (sf0.1:
-    * 2304 rows forced vs 1408/1536), for two compounding reasons a
-    * 100 TB deployment must check before paying for a Z-order rewrite.
-    * (a) Min-max quantization collapses under id-space skew: the CDC
-    * insert convention spaces keys at +1M/+2M/+3M, so the base corpus
-    * squashes into <1% of the quantized doc_id range and the curve's
-    * doc_id bits carry no information (rank/equi-depth quantization —
-    * simulated during development — recovers some of it but stays
-    * boundary-dominated). (b) The file count is below the curve's
-    * resolution floor: at 41 files against a 16×16 cell grid each file
-    * spans ~6 cells, so clustering cannot localize the box. CdcSpec's
-    * dense-id 256-file fixture sits ABOVE the floor and pins the
-    * crossover where Z-order beats both 1-D layouts. The gauge is the
-    * tool that tells an operator which regime their store is in BEFORE
-    * they pay for the rewrite — exactly what it reports here.
+  /** Every layout a commit can apply, by label ([[optimizeAutoCommit]]
+    * resolves the advisor's winner here).
     */
-  def zorderCdcGauge(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderStore(spark, docs, scratch)
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
-    Seq(("by_doc_id", 2), ("by_n_chars", 4), ("zorder", 5)).map {
-      case (layout, v) =>
-        manifestFrame(spark, s"$scratch/m/v=$v")
-          .select(col("lang"),
-            (col("max_doc_id") >= dlo && col("min_doc_id") <= dhi &&
-              col("max_n_chars") >= nlo && col("min_n_chars") <= nhi)
-              .as("admitted"),
-            col("n_rows"))
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("files_total"),
-            sum(when(col("admitted"), 1L).otherwise(0L)).as("files_admitted"),
-            sum(when(col("admitted"), col("n_rows")).otherwise(0L))
-              .as("rows_scanned"),
-            sum(col("n_rows")).as("rows_total"))
-          .withColumn("skip_bp",
-            expr("(rows_total - rows_scanned) * 10000 div rows_total"))
-          .withColumn("layout", lit(layout))
-    }.reduce(_ unionByName _)
-      .select("layout", "lang", "files_total", "files_admitted",
-        "rows_scanned", "rows_total", "skip_bp")
-  }
+  val layouts: Seq[Layout] = Seq(byDocId, byNChars, zorder, zorderEd)
 
   /** Equi-depth (rank-based) clustering key — the quantization fix for
-    * skewed key spaces that [[zorderCommit]]'s min-max gauge measured
+    * skewed key spaces that the [[zorder]] layout's min-max gauge measured
     * itself losing on: the CDC insert convention (+1M/+2M/+3M) squashes
     * base ids into <1% of the min-max-quantized range, so the curve's
     * doc_id bits carry nothing. Ranks are uniform BY CONSTRUCTION, so
@@ -2242,97 +1922,177 @@ object Cdc {
     else keyed.drop("__c", "__r", "__start", "__ra", "__rb", "qa", "qb")
   }
 
-  /** OPTIMIZE ZORDER with EQUI-DEPTH quantization as a commit: same
-    * rewrite-only discipline as [[zorderCommit]] (parent untouched,
-    * fresh zone maps, deterministic file boundaries), different
-    * quantizer — the option the min-max gauge's measured lesson pointed
-    * at. The (zbucket, doc_id) sort stays total, so the oracle replays
-    * rank windows + Morton ladder + chunking in SQL.
+  /** Write `df` as version `v`'s data under `layout` at `zoneRows` per
+    * file, then its manifest from the written files' footers.
     */
-  def zorderEquiDepthCommit(
-      spark: SparkSession, root: String, fromV: Int, toV: Int,
-      targetRows: Int): Unit = {
-    // equi-depth keying is itself multi-pass over its input, so THIS
-    // commit keeps a checkpoint of the as-of read (the keying's rank
-    // joins re-read it several times); writeData then materializes the
-    // KEYED frame once more so the rank joins run a single time.
-    val cur = readVersion(spark, root, fromV)
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .localCheckpoint()
-    writeData(zorderEquiDepthKeyed(cur, zorderBits),
-      s"$root/d$toV", targetRows, Seq("lang", "zbucket", "doc_id"),
+  private def writeLayout(spark: SparkSession, df: DataFrame, root: String,
+      v: Int, zoneRows: Int, layout: Layout): Unit = {
+    writeData(layout.keyed(df), s"$root/d$v", zoneRows, layout.sortCols,
       outCols = storeCols)
-    writeManifest(manifestEntries(spark, s"$root/d$toV",
-      dataLangs(spark, s"$root/d$toV")), s"$root/m/v=$toV")
+    writeManifest(manifestEntries(spark, s"$root/d$v",
+      dataLangs(spark, s"$root/d$v")), s"$root/m/v=$v")
   }
 
-  /** One-time build: the zorder chain plus the v6 equi-depth commit. */
-  def zorderEdStore(
-      spark: SparkSession, docs: DataFrame, scratch: String): Unit =
-    buildOnce(spark, s"$scratch#zed", s"$scratch/m/v=6") {
-      zorderStore(spark, docs, scratch)
-      zorderEquiDepthCommit(spark, scratch, 5, 6, defaultZoneRows)
-    }
-
-  /** Zone-map-SKIPPED 2-D box read of the equi-depth-Z-ordered v6 —
-    * shares its oracle SQL with [[zorderReadFull]] (the state is
-    * version-invariant), so the hash match is the no-false-negatives
-    * proof for the rank-quantized layout.
+  /** A layout rewrite AS A COMMIT: v(toV)'s state is bit-identical to
+    * v(fromV)'s (rewrite-only, nothing inserted/deleted/updated), its
+    * files are `layout`'s sorted runs rolled every `targetRows` records,
+    * and its manifest carries freshly computed zone maps. Modeling
+    * OPTIMIZE, re-sort and Z-order as commits keeps every invariant the
+    * store already has: v(fromV) keeps reading its own files (snapshot
+    * isolation), vacuum's manifest-row refcount reclaims them when the
+    * old version expires, and readers switch atomically.
     */
-  def zorderEdRead(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderEdStore(spark, docs, scratch)
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
+  def layoutCommit(
+      spark: SparkSession, root: String, fromV: Int, toV: Int,
+      targetRows: Int, layout: Layout): Unit =
+    writeLayout(spark, readVersion(spark, root, fromV)
+      .select(storeCols.map(col): _*), root, toV, targetRows, layout)
+
+  /** OPTIMIZE roll size: 4× the ingest zone size — big enough that the
+    * compaction ratio is visible at sf0.01, small enough that sf0.1
+    * still rolls many files per lang.
+    */
+  val optimizeTargetRows: Int = 512
+
+  /** The zoned-store chain, one row per version: (version, layout,
+    * rows per file). v0–v2 are the day-0 snapshot and the two daily
+    * merges written ZONED — (lang, doc_id)-sorted runs rolled every
+    * [[defaultZoneRows]] records, so file k of a partition holds its
+    * k-th sorted run and the oracle reproduces every zone map. v3 is
+    * OPTIMIZE at [[optimizeTargetRows]]; v4–v6 re-lay v2's state at the
+    * INGEST roll so the layout is the only variable between them and
+    * v2 (a coarser roll would confound clustering with file size).
+    */
+  private val zonedChain: Seq[(Int, Layout, Int)] = Seq(
+    (2, byDocId, defaultZoneRows),
+    (3, byDocId, optimizeTargetRows),
+    (4, byNChars, defaultZoneRows),
+    (5, zorder, defaultZoneRows),
+    (6, zorderEd, defaultZoneRows))
+
+  /** Build the zoned-store chain up to version `v` (2–6), one memoized
+    * level per version: each level first builds its parent, then commits
+    * its own row of [[zonedChain]], so any read leg pays only for the
+    * levels it needs and a rep on an already-built store pays nothing.
+    */
+  def zonedStore(
+      spark: SparkSession, docs: DataFrame, scratch: String,
+      v: Int = 2): Unit = {
+    val (_, layout, rows) = zonedChain.find(_._1 == v).getOrElse(
+      throw new IllegalArgumentException(s"zoned-store chain has no v=$v"))
+    buildOnce(spark, s"$scratch#v=$v", s"$scratch/m/v=$v") {
+      if (v == 2) {
+        versionedInit(spark, docs, scratch, rows)
+        versionedMerge(spark, scratch, 0, 1, day1Rules, dirtyLangs, rows)
+        versionedMerge(spark, scratch, 1, 2, day2Rules, dirtyLangs, rows)
+      } else {
+        zonedStore(spark, docs, scratch, v - 1)
+        layoutCommit(spark, scratch, v - 1, v, rows, layout)
+      }
+    }
+  }
+
+  /** The candidate layouts of the zoned-store chain, as (label, version)
+    * — every version holding the SAME state under a different layout at
+    * the same 128-row roll.
+    */
+  val zedLayouts: Seq[(String, Int)] = zonedChain.collect {
+    case (v, l, rows) if rows == defaultZoneRows => (l.label, v)
+  }
+
+  /** The band read of version `v` of the zoned chain: the exact
+    * conjunction of `columns`' [[band]]s over the as-of read, manifested
+    * per lang. `skip` lets the manifest's zone maps admit only the files
+    * overlapping every band; the unskipped twin opens the full file list
+    * and shares the skipped read's oracle SQL — the hash match IS the
+    * proof that file skipping changed nothing (zone maps have no false
+    * negatives; the exact predicate rejects anything extra an admitted
+    * file carries). At 100 TB this is the difference between opening
+    * every file of a partition and the ~15% whose zone overlaps.
+    */
+  def bandRead(
+      spark: SparkSession, docs: DataFrame, scratch: String, v: Int,
+      columns: Seq[String], skip: Boolean): DataFrame = {
+    zonedStore(spark, docs, scratch, v)
+    val bands = columns.map(band(docs, _))
     Governance.releaseManifestBy(
-      readVersion(spark, scratch, 6, idRange = Some((dlo, dhi)),
-          statRange = Some(("n_chars", nlo, nhi)))
-        .where(col("doc_id").between(dlo, dhi) &&
-          col("n_chars").between(nlo, nhi)),
+      readVersion(spark, scratch, v, bands = if (skip) bands else Nil)
+        .where(bands.map { case (c, lo, hi) => col(c).between(lo, hi) }
+          .reduce(_ && _)),
       "lang")
   }
 
-  /** [[zorderCdcGauge]] extended with the equi-depth arm: the SAME 2-D
-    * box priced against all FOUR layouts' zone maps at the same 128-row
-    * roll — the decision gauge that shows where rank quantization moves
-    * the min-max crossover on a skewed id space.
+  /** Data-skipping gauge (the
+    * [[graft.operators.StorageLayout.zorderSkippingGauge]] discipline
+    * applied to the CDC store): the SAME conjunction of `columns`'
+    * bands priced against each (label, version) layout's zone maps —
+    * per (layout, lang), how many FILES the bands admit vs total, how
+    * many rows those files force the scan to read vs the partition's
+    * total, and the skipped share in basis points. Pure manifest
+    * arithmetic — O(files) rows, the corpus is never read — and every
+    * chunking is total-order deterministic, so the oracle replays
+    * quantization, Morton ladder, chunking and admit arithmetic in SQL.
+    *
+    * MEASURED LESSON (hash-pinned at both SFs): on THIS store the
+    * min-max Z-order layout loses the 2-D box to both 1-D sorts (sf0.1:
+    * 2304 rows forced vs 1408/1536), for two compounding reasons a
+    * 100 TB deployment must check before paying for a Z-order rewrite.
+    * (a) Min-max quantization collapses under id-space skew: the CDC
+    * insert convention spaces keys at +1M/+2M/+3M, so the base corpus
+    * squashes into <1% of the quantized doc_id range and the curve's
+    * doc_id bits carry no information (the equi-depth layout's rank
+    * quantization is the fix). (b) The file count is below the curve's
+    * resolution floor: at 41 files against a 16×16 cell grid each file
+    * spans ~6 cells, so clustering cannot localize the box. CdcSpec's
+    * dense-id 256-file fixture sits ABOVE the floor and pins the
+    * crossover where Z-order beats both 1-D layouts. The gauge is the
+    * tool that tells an operator which regime their store is in BEFORE
+    * they pay for the rewrite.
     */
-  def zorderEdCdcGauge(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderEdStore(spark, docs, scratch)
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
-    Seq(("by_doc_id", 2), ("by_n_chars", 4), ("zorder", 5),
-      ("zorder_ed", 6)).map {
-      case (layout, v) =>
-        manifestFrame(spark, s"$scratch/m/v=$v")
-          .select(col("lang"),
-            (col("max_doc_id") >= dlo && col("min_doc_id") <= dhi &&
-              col("max_n_chars") >= nlo && col("min_n_chars") <= nhi)
-              .as("admitted"),
-            col("n_rows"))
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("files_total"),
-            sum(when(col("admitted"), 1L).otherwise(0L)).as("files_admitted"),
-            sum(when(col("admitted"), col("n_rows")).otherwise(0L))
-              .as("rows_scanned"),
-            sum(col("n_rows")).as("rows_total"))
-          .withColumn("skip_bp",
-            expr("(rows_total - rows_scanned) * 10000 div rows_total"))
-          .withColumn("layout", lit(layout))
+  def layoutGauge(
+      spark: SparkSession, docs: DataFrame, scratch: String,
+      layouts: Seq[(String, Int)], columns: Seq[String]): DataFrame = {
+    zonedStore(spark, docs, scratch, layouts.map(_._2).max)
+    val bands = columns.map(band(docs, _))
+    layouts.map { case (layout, v) =>
+      manifestFrame(spark, s"$scratch/m/v=$v")
+        .select(col("lang"), admits(bands).as("admitted"), col("n_rows"))
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("files_total"),
+          sum(when(col("admitted"), 1L).otherwise(0L)).as("files_admitted"),
+          sum(when(col("admitted"), col("n_rows")).otherwise(0L))
+            .as("rows_scanned"),
+          sum(col("n_rows")).as("rows_total"))
+        .withColumn("skip_bp",
+          expr("(rows_total - rows_scanned) * 10000 div rows_total"))
+        .withColumn("layout", lit(layout))
     }.reduce(_ unionByName _)
       .select("layout", "lang", "files_total", "files_admitted",
         "rows_scanned", "rows_total", "skip_bp")
   }
 
-  // ---- layout advisor (r17) ---------------------------------------------
-
-  /** The candidate layouts of the zoned-store chain, as (label, version)
-    * — the versions [[zorderEdStore]] leaves behind, all holding the SAME
-    * state under different clusterings at the same 128-row roll.
+  /** Registered OPTIMIZE query: the zoned store's v2 (128-row files)
+    * compacted into v3 (512-row files), read back per lang WITH the
+    * before/after file counts beside the state checksum — one hash
+    * proves (a) compaction changed no row (same n_docs / sum_chars /
+    * fp_xor the time-travel v2 leg pins), (b) the deterministic
+    * re-chunking landed exactly ceil(n/512) files per lang, and (c) the
+    * 128-row layout it replaced had its own deterministic count — the
+    * oracle recomputes BOTH chunkings from the corpus state.
     */
-  val zedLayouts: Seq[(String, Int)] =
-    Seq(("by_doc_id", 2), ("by_n_chars", 4), ("zorder", 5), ("zorder_ed", 6))
+  def optimizeManifest(
+      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
+    zonedStore(spark, docs, scratch, 3)
+    val counts = manifestFrame(spark, s"$scratch/m/v=2")
+      .groupBy(col("lang")).agg(count(lit(1)).as("files_before"))
+      .join(manifestFrame(spark, s"$scratch/m/v=3")
+        .groupBy(col("lang")).agg(count(lit(1)).as("files_after")),
+        Seq("lang"))
+    Governance.releaseManifestBy(readVersion(spark, scratch, 3), "lang")
+      .join(counts, Seq("lang"))
+  }
+
+  // ---- layout advisor (r17) ---------------------------------------------
 
   /** LAYOUT ADVISOR — turn the gauge into a decision: rank candidate
     * layouts by the total rows a WORKLOAD of band predicates forces each
@@ -2375,18 +2135,13 @@ object Cdc {
         "every workload query must carry at least one (column, lo, hi) " +
         "band, and every replay weight must be positive")
     val ranked = layouts.map { case (label, v) =>
-      val m = manifestFrame(spark, s"$root/m/v=$v")
-      val admits = workload.map { case (q, wt) =>
-        (q.map { case (c, lo, hi) =>
-          col(s"max_$c") >= lo && col(s"min_$c") <= hi
-        }.reduce(_ && _), wt)
-      }
-      m.agg(
+      manifestFrame(spark, s"$root/m/v=$v").agg(
         count(lit(1)).as("files_total"),
-        admits.map { case (p, wt) => sum(when(p, lit(wt)).otherwise(0L)) }
-          .reduce(_ + _).as("files_admitted"),
-        admits.map { case (p, wt) =>
-          sum(when(p, lit(wt) * col("n_rows")).otherwise(0L))
+        workload.map { case (q, wt) =>
+          sum(when(admits(q), lit(wt)).otherwise(0L))
+        }.reduce(_ + _).as("files_admitted"),
+        workload.map { case (q, wt) =>
+          sum(when(admits(q), lit(wt) * col("n_rows")).otherwise(0L))
         }.reduce(_ + _).as("rows_scanned"),
         sum(col("n_rows")).as("rows_total"))
         .withColumn("layout", lit(label))
@@ -2405,11 +2160,9 @@ object Cdc {
     */
   def layoutAdvice(
       spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderEdStore(spark, docs, scratch)
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
+    zonedStore(spark, docs, scratch, 6)
     adviseLayout(spark, scratch, zedLayouts,
-      Seq(Seq(("doc_id", dlo, dhi), ("n_chars", nlo, nhi))))
+      Seq(Seq(band(docs, "doc_id"), band(docs, "n_chars"))))
   }
 
   /** The advisor under a MIXED workload — one band query per dimension,
@@ -2423,11 +2176,9 @@ object Cdc {
     */
   def layoutAdviceMixed(
       spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderEdStore(spark, docs, scratch)
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
+    zonedStore(spark, docs, scratch, 6)
     adviseLayout(spark, scratch, zedLayouts,
-      Seq(Seq(("doc_id", dlo, dhi)), Seq(("n_chars", nlo, nhi))))
+      Seq(Seq(band(docs, "doc_id")), Seq(band(docs, "n_chars"))))
   }
 
   /** The advisor fed from a CAPTURED workload log ([[readManifest]]'s
@@ -2473,88 +2224,62 @@ object Cdc {
     adviseLayoutWeighted(spark, root, layouts, workload)
   }
 
-  /** Registered logged-advisor chain: the two mixed-workload reads are
-    * ISSUED against v6 with the workload log attached (each read prunes
-    * through its band and leaves its record; the frames themselves are
-    * discarded — manifest pruning happens eagerly, so logging costs no
-    * data scan), then the advisor is fed from the log alone. Same bands
-    * as [[layoutAdviceMixed]], so the oracle — and the decision — must
-    * match the hand-fed mixed advisor exactly.
+  /** Registered logged-advisor chain: the two mixed-workload band
+    * shapes are ISSUED against v6 with the workload log attached — the
+    * doc_id band `docIdReps` times, then the n_chars band once (each
+    * read prunes through its band and leaves its record; the frames
+    * themselves are discarded — manifest pruning happens eagerly, so
+    * logging costs no data scan) — and the advisor is fed from the log
+    * alone, pricing each qid at its logged frequency when the doc_id
+    * band repeats.
+    *
+    * At `docIdReps = 1` the bands are those of [[layoutAdviceMixed]],
+    * so the oracle — and the decision — must match the hand-fed mixed
+    * advisor exactly. At 3 the point is the DECISION, not the numbers:
+    * at 1:1 the per-dimension mix favors the equi-depth Z layout; at
+    * 3:1 the hot doc_id band drags the bill toward the 1-D doc_id sort
+    * — the flip a set-semantics advisor can never see. That oracle
+    * replays the weighted ranking with the 3× multiplier inlined, so the
+    * hash pins capture → frequency → flipped winner in one artifact.
     */
   def layoutAdviceLogged(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderEdStore(spark, docs, scratch)
-    val logDir = s"$scratch/wlog"
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
-    buildOnce(spark, s"$scratch#wlog", s"$logDir/_logged") {
+      spark: SparkSession, docs: DataFrame, scratch: String,
+      docIdReps: Int = 1): DataFrame = {
+    zonedStore(spark, docs, scratch, 6)
+    val logDir = s"$scratch/wlog" + (if (docIdReps == 1) "" else docIdReps)
+    val (dBand, nBand) = (band(docs, "doc_id"), band(docs, "n_chars"))
+    buildOnce(spark, logDir, s"$logDir/_logged") {
       val fs = new org.apache.hadoop.fs.Path(logDir)
         .getFileSystem(spark.sessionState.newHadoopConf())
       fs.delete(new org.apache.hadoop.fs.Path(logDir), true)
-      readVersion(spark, scratch, 6, idRange = Some((dlo, dhi)),
-        workloadLog = Some((logDir, 0L)))
-      readVersion(spark, scratch, 6,
-        statRange = Some(("n_chars", nlo, nhi)),
-        workloadLog = Some((logDir, 1L)))
-      fs.create(new org.apache.hadoop.fs.Path(s"$logDir/_logged"), true)
-        .close()
-    }
-    adviseLayoutLogged(spark, scratch, zedLayouts, logDir)
-  }
-
-  /** Registered weighted-advisor chain: the SAME two mixed-workload
-    * band shapes, but the doc_id box is issued three times for every
-    * n_chars band (each read logging through the `workloadLog` sink),
-    * and the advisor prices qids at their logged frequency
-    * (`weighted = true`). The point is the DECISION, not the numbers:
-    * at 1:1 the per-dimension mix favors the equi-depth Z layout
-    * (io_cdc_layout_advise_mixed); at 3:1 the hot doc_id band drags
-    * the bill toward the 1-D doc_id sort — the flip a set-semantics
-    * advisor can never see. The oracle replays the weighted ranking
-    * with the 3× multiplier inlined, so the hash pins capture →
-    * frequency → flipped winner in one artifact.
-    */
-  def layoutAdviceWeighted(
-      spark: SparkSession, docs: DataFrame, scratch: String): DataFrame = {
-    zorderEdStore(spark, docs, scratch)
-    val logDir = s"$scratch/wlog3"
-    val (dlo, dhi) = zoneBand(docs)
-    val (nlo, nhi) = nCharsBand(docs)
-    buildOnce(spark, s"$scratch#wlog3", s"$logDir/_logged") {
-      val fs = new org.apache.hadoop.fs.Path(logDir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(logDir), true)
-      (1 to 3).foreach { _ =>
-        readVersion(spark, scratch, 6, idRange = Some((dlo, dhi)),
+      (1 to docIdReps).foreach { _ =>
+        readVersion(spark, scratch, 6, bands = Seq(dBand),
           workloadLog = Some((logDir, 0L)))
       }
-      readVersion(spark, scratch, 6,
-        statRange = Some(("n_chars", nlo, nhi)),
+      readVersion(spark, scratch, 6, bands = Seq(nBand),
         workloadLog = Some((logDir, 1L)))
       fs.create(new org.apache.hadoop.fs.Path(s"$logDir/_logged"), true)
         .close()
     }
-    adviseLayoutLogged(spark, scratch, zedLayouts, logDir, weighted = true)
+    adviseLayoutLogged(spark, scratch, zedLayouts, logDir,
+      weighted = docIdReps > 1)
   }
 
   /** Apply an advice frame's winner as a rewrite-only commit — the
     * auto-OPTIMIZE decision step. The winner read is ONE metadata row;
-    * the commit is the same one-time rewrite the manual OPTIMIZE /
-    * resort / zorder commits already price. Returns the chosen label.
+    * the commit is the same [[layoutCommit]] the manual OPTIMIZE /
+    * resort / zorder chain levels already price. Returns the chosen
+    * label; a label no [[layouts]] entry carries throws before anything
+    * is written.
     */
   def optimizeAutoCommit(
       spark: SparkSession, root: String, fromV: Int, toV: Int,
       targetRows: Int, advice: DataFrame): String = {
     val winner = advice.orderBy(col("rank")).select("layout").head.getString(0)
-    winner match {
-      case "by_doc_id" => optimizeCommit(spark, root, fromV, toV, targetRows)
-      case "by_n_chars" => resortCommit(spark, root, fromV, toV, targetRows)
-      case "zorder" => zorderCommit(spark, root, fromV, toV, targetRows)
-      case "zorder_ed" =>
-        zorderEquiDepthCommit(spark, root, fromV, toV, targetRows)
-      case other => throw new IllegalArgumentException(
-        s"adviseLayout returned an unknown layout label: $other")
-    }
+    val layout = layouts.find(_.label == winner).getOrElse(
+      throw new IllegalArgumentException(
+        s"adviseLayout returned an unknown layout label: $winner"))
+    layoutCommit(spark, root, fromV, toV, targetRows, layout)
     winner
   }
 
@@ -2612,7 +2337,7 @@ object Cdc {
   def optimizeAutoStore(
       spark: SparkSession, docs: DataFrame, scratch: String): Unit =
     buildOnce(spark, s"$scratch#auto", s"$scratch/m/v=7") {
-      zorderEdStore(spark, docs, scratch)
+      zonedStore(spark, docs, scratch, 6)
       optimizeAutoCommit(spark, scratch, 6, 7, defaultZoneRows,
         layoutAdvice(spark, docs, scratch))
     }

@@ -503,13 +503,13 @@ class CdcSpec extends GraftSpec {
       lit("s1").as("source"),
       ((col("id") * 37) % 500 + 10).as("n_chars"))
     Cdc.versionedInit(spark, docs, root, 128)
-    Cdc.resortCommit(spark, root, 0, 1, 128)
+    Cdc.layoutCommit(spark, root, 0, 1, 128, Cdc.byNChars)
     // rewrite-only: not a row moved
     assert(rowSet(Cdc.readVersion(spark, root, 1)) ===
       rowSet(Cdc.readVersion(spark, root, 0)))
-    val (lo, hi) = Cdc.nCharsBand(docs)
+    val (_, lo, hi) = Cdc.band(docs, "n_chars")
     val skipped = Cdc.readVersion(spark, root, 1,
-        statRange = Some(("n_chars", lo, hi)))
+        bands = Seq(("n_chars", lo, hi)))
       .where(col("n_chars").between(lo, hi))
     val full = Cdc.readVersion(spark, root, 1)
       .where(col("n_chars").between(lo, hi))
@@ -540,12 +540,12 @@ class CdcSpec extends GraftSpec {
       lit("s1").as("source"),
       ((col("id") * 37) % 500 + 10).as("n_chars"))
     Cdc.versionedInit(spark, docs, root, 16)   // v0: by doc_id
-    Cdc.resortCommit(spark, root, 0, 1, 16)    // v1: by n_chars
-    Cdc.zorderCommit(spark, root, 1, 2, 16)    // v2: z-order
+    Cdc.layoutCommit(spark, root, 0, 1, 16, Cdc.byNChars) // v1: by n_chars
+    Cdc.layoutCommit(spark, root, 1, 2, 16, Cdc.zorder)   // v2: z-order
     assert(rowSet(Cdc.readVersion(spark, root, 2)) ===
       rowSet(Cdc.readVersion(spark, root, 0)))
-    val (dlo, dhi) = Cdc.zoneBand(docs)
-    val (nlo, nhi) = Cdc.nCharsBand(docs)
+    val (_, dlo, dhi) = Cdc.band(docs, "doc_id")
+    val (_, nlo, nhi) = Cdc.band(docs, "n_chars")
     def scanned(v: Int): Long =
       Cdc.manifestFrame(spark, s"$root/m/v=$v")
         .where(col("max_doc_id") >= dlo && col("min_doc_id") <= dhi &&
@@ -558,8 +558,7 @@ class CdcSpec extends GraftSpec {
     val box = col("doc_id").between(dlo, dhi) &&
       col("n_chars").between(nlo, nhi)
     val skipped = Cdc.readVersion(spark, root, 2,
-      idRange = Some((dlo, dhi)),
-      statRange = Some(("n_chars", nlo, nhi))).where(box)
+      bands = Seq(("doc_id", dlo, dhi), ("n_chars", nlo, nhi))).where(box)
     val full = Cdc.readVersion(spark, root, 2).where(box)
     assert(rowSet(skipped) === rowSet(full))
     assert(skipped.inputFiles.length < full.inputFiles.length)
@@ -670,15 +669,16 @@ class CdcSpec extends GraftSpec {
     // the skipped read admits strictly fewer files yet returns the
     // identical aggregate state (zone maps have no false negatives, the
     // re-applied exact predicate removes anything extra)
-    val skipped = Cdc.zonemapRead(spark, docs, root)
-    val full = Cdc.zonemapReadFull(spark, docs, root)
+    val skipped = Cdc.bandRead(spark, docs, root, 2, Seq("doc_id"), skip = true)
+    val full = Cdc.bandRead(spark, docs, root, 2, Seq("doc_id"), skip = false)
     assert(skipped.collect().map(_.toSeq).toSet ===
       full.collect().map(_.toSeq).toSet)
     assert(skipped.inputFiles.length < full.inputFiles.length,
       s"${skipped.inputFiles.length} vs ${full.inputFiles.length}")
     // the gauge agrees with the physical admit count and reports real
     // skipping for every lang
-    val gauge = Cdc.zonemapGauge(spark, docs, root).collect()
+    val gauge = Cdc.layoutGauge(spark, docs, root, Cdc.zedLayouts.take(1),
+        Seq("doc_id")).collect()
       .map(r => r.getAs[String]("lang") ->
         ((r.getAs[Long]("files_admitted"), r.getAs[Long]("files_total"),
           r.getAs[Long]("skip_bp")))).toMap
@@ -703,7 +703,7 @@ class CdcSpec extends GraftSpec {
     // identical rows, strictly fewer files per multi-file lang, fresh
     // zone maps respecting the larger roll, and v2 still reading its own
     // small files afterwards (snapshot isolation through compaction)
-    Cdc.optimizeCommit(spark, root, 2, 3, Cdc.optimizeTargetRows)
+    Cdc.layoutCommit(spark, root, 2, 3, Cdc.optimizeTargetRows, Cdc.byDocId)
     assert(rowSet(Cdc.readVersion(spark, root, 3)) ===
       rowSet(Cdc.readVersion(spark, root, 2)))
     val m3 = Cdc.manifestFrame(spark, s"$root/m/v=3").collect()
@@ -732,13 +732,13 @@ class CdcSpec extends GraftSpec {
     // a band no file's zone map overlaps → zero admitted files, an
     // empty frame with the store schema (literal — no sample-file read)
     val empty = Cdc.readVersion(spark, root, 0,
-      idRange = Some((100000L, 200000L)))
+      bands = Seq(("doc_id", 100000L, 200000L)))
     assert(empty.count() === 0L)
     assert(empty.columns.toSeq ===
       Seq("doc_id", "text", "source", "n_chars", "lang"))
     assert(empty.inputFiles.isEmpty, "zero-admission must read no file")
     // and unions cleanly with a non-empty admitted read (schema parity)
-    val some = Cdc.readVersion(spark, root, 0, idRange = Some((1L, 50L)))
+    val some = Cdc.readVersion(spark, root, 0, bands = Seq(("doc_id", 1L, 50L)))
     assert(some.unionByName(empty).count() === some.count())
   }
 
@@ -760,8 +760,8 @@ class CdcSpec extends GraftSpec {
       lit("s1").as("source"),
       ((col("doc_id") * 37) % 500 + 10).cast("long").as("n_chars"))
     Cdc.versionedInit(spark, docs, root, 16)          // v0: by doc_id
-    Cdc.zorderCommit(spark, root, 0, 1, 16)           // v1: min-max Z
-    Cdc.zorderEquiDepthCommit(spark, root, 1, 2, 16)  // v2: equi-depth Z
+    Cdc.layoutCommit(spark, root, 0, 1, 16, Cdc.zorder)   // v1: min-max Z
+    Cdc.layoutCommit(spark, root, 1, 2, 16, Cdc.zorderEd) // v2: equi-depth Z
     assert(rowSet(Cdc.readVersion(spark, root, 2)) ===
       rowSet(Cdc.readVersion(spark, root, 0)))
     // a 2-D box inside the dense base: doc_id middle band × n_chars band
@@ -835,7 +835,7 @@ class CdcSpec extends GraftSpec {
     assert(got === expected)
     // same contract under an evolved sort key — n_chars is coarse, so
     // this exercises the doc_id SUB-cell branch of the rank grid
-    Cdc.resortCommit(spark, root, 0, 1, Cdc.defaultZoneRows)
+    Cdc.layoutCommit(spark, root, 0, 1, Cdc.defaultZoneRows, Cdc.byNChars)
     val expectedN = docs.collect()
       .map(r => (r.getAs[String]("lang"), r.getAs[Long]("n_chars"),
         r.getAs[Long]("doc_id")))
@@ -993,7 +993,7 @@ class CdcSpec extends GraftSpec {
     val docs2 = Tables.load(spark, sf, "documents")
     val root = java.nio.file.Files
       .createTempDirectory("graft_gate").toString
-    Cdc.zorderEdStore(spark, docs2, root)
+    Cdc.zonedStore(spark, docs2, root, 6)
     val realAdvice = Cdc.layoutAdvice(spark, docs2, root)
     val (_, kept) = Cdc.optimizeAutoGatedCommit(
       spark, root, 6, 7, Cdc.defaultZoneRows, realAdvice,
@@ -1094,9 +1094,9 @@ class CdcSpec extends GraftSpec {
       .map(r => (r.getAs[String]("layout"), r.getAs[Long]("files_total"),
         r.getAs[Long]("files_admitted"), r.getAs[Long]("rows_scanned"),
         r.getAs[Long]("rows_total"), r.getAs[Long]("rank"))).toSet
-    val weighted = rows(Cdc.layoutAdviceWeighted(spark, docs, root))
-    val (dlo, dhi) = Cdc.zoneBand(docs)
-    val (nlo, nhi) = Cdc.nCharsBand(docs)
+    val weighted = rows(Cdc.layoutAdviceLogged(spark, docs, root, docIdReps = 3))
+    val (_, dlo, dhi) = Cdc.band(docs, "doc_id")
+    val (_, nlo, nhi) = Cdc.band(docs, "n_chars")
     val handFed = rows(Cdc.adviseLayoutWeighted(spark, root, Cdc.zedLayouts,
       Seq((Seq(("doc_id", dlo, dhi)), 3L), (Seq(("n_chars", nlo, nhi)), 1L))))
     assert(weighted === handFed && weighted.nonEmpty,
@@ -1147,5 +1147,51 @@ class CdcSpec extends GraftSpec {
         $"p", Cdc.scanPathNormRe, "").as("n"))
       .as[String].collect().toSet
     assert(viaColumn === Set("/a/lang=en/part-0.parquet"))
+  }
+
+  test("as-of read keys scan and manifest paths alike under a root " +
+    "holding a space, a literal %41 or a +") {
+    // input_file_name is URL-encoded (space -> %20, % -> %25) while the
+    // manifest records raw Hadoop paths; aggregating over lang keeps the
+    // join's guard column in the plan (a bare count() prunes it)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_paths").toString
+    val expected = rowSet(fixture2).groupBy(_._3)
+      .map { case (l, rs) => l -> rs.size.toLong }
+    Seq("a b", "%41", "a+b").foreach { name =>
+      val root = s"$tmp/$name/store"
+      Cdc.versionedInit(spark, fixture2, root)
+      val got = Cdc.readVersion(spark, root, 0).groupBy("lang").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got === expected, s"root '$name'")
+    }
+  }
+
+  test("rtbf purge under a space-bearing root reads back the plain " +
+    "root's rows") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rtbf_sp").toString
+    def purgedReads(root: String) = {
+      Cdc.versionedInit(spark, fixture2, root)
+      Cdc.versionedMerge(spark, root, 0, 1, Cdc.day1Rules)
+      Cdc.versionedMerge(spark, root, 1, 2, Cdc.day2Rules)
+      Cdc.rtbfPurge(spark, root, Seq(0, 1, 2), 7L, 0L)
+      (0 to 2).map(v => rowSet(Cdc.readVersion(spark, root, v)))
+    }
+    val plain = purgedReads(s"$tmp/plain/store")
+    assert(plain(2) === day2Final.filter(_._1 % 7 != 0))
+    assert(purgedReads(s"$tmp/with space/store") === plain)
+  }
+
+  test("auto-OPTIMIZE refuses a layout label no descriptor carries and " +
+    "writes no version") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_badlabel").toString + "/store"
+    Cdc.versionedInit(spark, fixture2, root, 16)
+    val advice = Seq(("by_hilbert", 1L)).toDF("layout", "rank")
+    val e = intercept[IllegalArgumentException] {
+      Cdc.optimizeAutoCommit(spark, root, 0, 1, 16, advice)
+    }
+    assert(e.getMessage.contains("by_hilbert"))
+    assert(!new java.io.File(s"$root/m/v=1").exists())
+    assert(!new java.io.File(s"$root/d1").exists())
   }
 }
