@@ -194,7 +194,10 @@ object Cbo {
       withConfs(spark, Seq(graft.Tables.statsCatalogConf -> dir))(body)
     }
 
-  private def withConfs[T](spark: SparkSession, kvs: Seq[(String, String)])(
+  /** Run `body` with session confs `kvs` set, restoring (or unsetting)
+    * the prior values after. Same force-inside rule as [[withCbo]].
+    */
+  def withConfs[T](spark: SparkSession, kvs: Seq[(String, String)])(
       body: => T): T = {
     val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }

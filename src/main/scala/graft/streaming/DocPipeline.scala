@@ -49,6 +49,17 @@ object DocPipeline {
       docs: DataFrame,
       minScore: Double = 0.3,
       watermarkDelay: String = "30 seconds"): DataFrame =
+    curated(docs, minScore, watermarkDelay, CuratedCols)
+
+  private val CuratedCols =
+    Seq("doc_id", "lang", "lang_pred", "n_tokens", "n_chars", "quality_score", "fp")
+
+  /** The one curation chain behind [[curate]] and [[curateMixed]],
+    * projected onto `cols`.
+    */
+  private def curated(
+      docs: DataFrame, minScore: Double, watermarkDelay: String,
+      cols: Seq[String]): DataFrame =
     TextAnalysis.enrich(docs)
       // ingest-time watermark: documents carry no event time, so dedup
       // state is bounded by arrival time (the standard ingest-ts pattern)
@@ -57,8 +68,7 @@ object DocPipeline {
       .dropDuplicatesWithinWatermark("fp")
       .filter(col("quality_score").isNotNull && !isnan(col("quality_score")) &&
         col("quality_score") >= minScore)
-      .select("doc_id", "lang", "lang_pred", "n_tokens", "n_chars",
-        "quality_score", "fp")
+      .select(cols.map(col): _*)
 
   /** [[curate]] with an ingest-side DECONTAMINATION stage in front: drop
     * every incoming doc whose MinHash-LSH bucket collides with the
@@ -98,21 +108,11 @@ object DocPipeline {
       evalBuckets: Option[DataFrame] = None,
       minScore: Double = 0.3,
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val in = evalBuckets match {
-      case Some(b) => Dedup.decontaminateFilter(docs, b)
-      case None => docs
-    }
-    val curated = TextAnalysis.enrich(in)
-      .withColumn("ingest_ts", current_timestamp())
-      .withWatermark("ingest_ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("fp")
-      .filter(col("quality_score").isNotNull && !isnan(col("quality_score")) &&
-        col("quality_score") >= minScore)
-      .select("doc_id", "lang", "source", "lang_pred", "n_tokens", "n_chars",
-        "quality_score", "fp")
-    graft.operators.Packing.withCopyCounts(curated, weights)
-      .select("doc_id", "lang", "source", "lang_pred", "n_tokens", "n_chars",
-        "quality_score", "fp", "n_copies")
+    val cols = Seq("doc_id", "lang", "source", "lang_pred", "n_tokens", "n_chars",
+      "quality_score", "fp")
+    val in = evalBuckets.fold(docs)(Dedup.decontaminateFilter(docs, _))
+    graft.operators.Packing.withCopyCounts(curated(in, minScore, watermarkDelay, cols), weights)
+      .select((cols :+ "n_copies").map(col): _*)
   }
 
   /** [[curate]] with the MODEL quality gate at ingest: the trained
@@ -169,147 +169,77 @@ object DocPipeline {
   * deployment main.
   */
 object DocPipelineJob {
-  def main(args: Array[String]): Unit = {
-    val inputDir = args(0)
-    val sinkSpec = if (args.length > 1 && !args(1).startsWith("--")) args(1) else "console"
-    val once = args.contains("--once")
-    val minScore = args.collectFirst {
-      case a if a.startsWith("--min-score=") => a.stripPrefix("--min-score=").toDouble
-    }.getOrElse(0.3)
-    val evalBucketsDir = args.collectFirst {
-      case a if a.startsWith("--eval-buckets=") => a.stripPrefix("--eval-buckets=")
-    }
-    val weightsDir = args.collectFirst {
-      case a if a.startsWith("--weights=") => a.stripPrefix("--weights=")
-    }
-
-    val spark = graft.Posture.session()
-
-    val in = DocPipeline.fileJson(spark, inputDir)
-    val out = (weightsDir, evalBucketsDir) match {
+  private[streaming] val job: JobRunner.Job = JobRunner.Job("DocPipelineJob",
+      positional = Seq("inputDir"), flags = Seq("min-score", "eval-buckets", "weights"),
+      view = "curated_docs", partitionBy = Seq("lang_pred")) { (spark, a) =>
+    val minScore = a.flags.get("min-score").fold(0.3)(_.toDouble)
+    val evalBuckets = a.flags.get("eval-buckets").map(spark.read.parquet(_))
+    val in = DocPipeline.fileJson(spark, a.positional(0))
+    (a.flags.get("weights"), evalBuckets) match {
       case (Some(w), buckets) =>
-        DocPipeline.curateMixed(in, spark.read.parquet(w),
-          buckets.map(spark.read.parquet(_)), minScore)
-      case (None, Some(dir)) =>
-        DocPipeline.curateDecontaminated(in, spark.read.parquet(dir), minScore)
+        DocPipeline.curateMixed(in, spark.read.parquet(w), buckets, minScore)
+      case (None, Some(b)) => DocPipeline.curateDecontaminated(in, b, minScore)
       case (None, None) => DocPipeline.curate(in, minScore)
     }
-    out.createOrReplaceTempView("curated_docs")
-
-    val sink = JobRunner.parseSink(sinkSpec) match {
-      case TickSink.PartitionedParquet(p, c, _) =>
-        TickSink.PartitionedParquet(p, c, Seq("lang_pred"))
-      case s => s
-    }
-    val q = TickSink.start(out, sink, availableNow = once)
-    if (args.contains("--detach")) {
-      println(JobStatus.statusLine(q))
-      JobStatus.progressLine(q).foreach(println)
-      if (once) { q.awaitTermination(); spark.stop() }
-    } else {
-      q.awaitTermination()
-      if (once) spark.stop()
-    }
   }
+  def main(args: Array[String]): Unit = JobRunner.run(job, args)
 }
 
 /** Streaming near-duplicate detection job main:
   * runMain graft.streaming.NearDupJob <inputDir>
-  *   [console|changelog|noop|parquet:<out>:<ckpt>] [--once] [--detach]
-  *   [--max-hamming=3] [--horizon-seconds=3600]
+  *   [console|changelog|noop|parquet:<out>:<ckpt>|parquet-once:<out>:<ckpt>]
+  *   [--once] [--detach] [--max-hamming=3] [--horizon-seconds=3600]
   * Input: a JSON document stream with (doc_id, text, utc); output: the
-  * near-dup pair stream of [[StreamingQueries.simhashPairsStream]].
-  * Requires the RocksDB state store ([[graft.Posture.session]]'s default —
-  * transformWithState needs column families the heap store lacks).
+  * near-dup pair stream of [[StreamingQueries.simhashPairsStream]],
+  * written unpartitioned by a `parquet:` sink. Requires the RocksDB state
+  * store ([[graft.Posture.session]]'s default — transformWithState needs
+  * column families the heap store lacks).
   */
 object NearDupJob {
-  import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
-
   val nearDupDocSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("text", StringType),
     StructField("utc", TimestampType)))
 
-  def main(args: Array[String]): Unit = {
-    val inputDir = args(0)
-    val sinkSpec = if (args.length > 1 && !args(1).startsWith("--")) args(1) else "console"
-    val once = args.contains("--once")
-    val maxHamming = args.collectFirst {
-      case a if a.startsWith("--max-hamming=") => a.stripPrefix("--max-hamming=").toInt
-    }.getOrElse(3)
-    val horizonSeconds = args.collectFirst {
-      case a if a.startsWith("--horizon-seconds=") =>
-        a.stripPrefix("--horizon-seconds=").toLong
-    }.getOrElse(3600L)
-
-    val spark = graft.Posture.session()
+  private[streaming] val job: JobRunner.Job = JobRunner.Job("NearDupJob",
+      positional = Seq("inputDir"), flags = Seq("max-hamming", "horizon-seconds"),
+      view = "near_dup_pairs", partitionBy = Nil) { (spark, a) =>
     import spark.implicits._
-
-    val docs = spark.readStream.schema(nearDupDocSchema).json(inputDir)
+    val docs = spark.readStream.schema(nearDupDocSchema).json(a.positional(0))
       .as[StreamingQueries.SimhashDoc]
-    val out = StreamingQueries.simhashPairsStream(
-      spark, docs, maxHamming, horizonSeconds = horizonSeconds).toDF()
-    out.createOrReplaceTempView("near_dup_pairs")
-
-    val q = TickSink.start(out, JobRunner.parseSink(sinkSpec), availableNow = once)
-    if (args.contains("--detach")) {
-      println(JobStatus.statusLine(q))
-      JobStatus.progressLine(q).foreach(println)
-      if (once) { q.awaitTermination(); spark.stop() }
-    } else {
-      q.awaitTermination()
-      if (once) spark.stop()
-    }
+    StreamingQueries.simhashPairsStream(spark, docs,
+      a.flags.get("max-hamming").fold(3)(_.toInt),
+      horizonSeconds = a.flags.get("horizon-seconds").fold(3600L)(_.toLong)).toDF()
   }
+  def main(args: Array[String]): Unit = JobRunner.run(job, args)
 }
 
 /** Streaming grid forward-fill job main:
   * runMain graft.streaming.GridFillJob <inputDir>
-  *   [console|changelog|noop|parquet:<out>:<ckpt>] [--once] [--detach]
-  *   [--width-minutes=15] [--watermark="10 seconds"]
+  *   [console|changelog|noop|parquet:<out>:<ckpt>|parquet-once:<out>:<ckpt>]
+  *   [--once] [--detach] [--width-minutes=15] [--watermark="10 seconds"]
   * Input: a JSON event stream with (event_type, utc, value); output: the
   * regularized bucket grid of [[StreamingQueries.gridForwardFillTws]] —
   * every closed bucket in order, observed buckets with their exact
-  * average, gaps carrying the last observed value. Requires the RocksDB
-  * state store ([[graft.Posture.session]]'s default).
+  * average, gaps carrying the last observed value — which a `parquet:`
+  * sink partitions by its key, `event_type`. Requires the RocksDB state
+  * store ([[graft.Posture.session]]'s default).
   */
 object GridFillJob {
-  import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType, TimestampType}
-
   val fillEventSchema: StructType = StructType(Seq(
     StructField("event_type", StringType),
     StructField("utc", TimestampType),
     StructField("value", DoubleType)))
 
-  def main(args: Array[String]): Unit = {
-    val inputDir = args(0)
-    val sinkSpec = if (args.length > 1 && !args(1).startsWith("--")) args(1) else "console"
-    val once = args.contains("--once")
-    val widthMinutes = args.collectFirst {
-      case a if a.startsWith("--width-minutes=") =>
-        a.stripPrefix("--width-minutes=").toInt
-    }.getOrElse(15)
-    val watermark = args.collectFirst {
-      case a if a.startsWith("--watermark=") => a.stripPrefix("--watermark=")
-    }.getOrElse("10 seconds")
-
-    val spark = graft.Posture.session()
+  private[streaming] val job: JobRunner.Job = JobRunner.Job("GridFillJob",
+      positional = Seq("inputDir"), flags = Seq("width-minutes", "watermark"),
+      view = "grid_fill", partitionBy = Seq("event_type")) { (spark, a) =>
     import spark.implicits._
-
-    val events = spark.readStream.schema(fillEventSchema).json(inputDir)
+    val events = spark.readStream.schema(fillEventSchema).json(a.positional(0))
       .as[StreamingQueries.FillEvent]
-    val out = StreamingQueries
-      .gridForwardFillTws(spark, events, widthMinutes, watermark).toDF()
-    out.createOrReplaceTempView("grid_fill")
-
-    val q = TickSink.start(out, JobRunner.parseSink(sinkSpec), availableNow = once)
-    if (args.contains("--detach")) {
-      println(JobStatus.statusLine(q))
-      JobStatus.progressLine(q).foreach(println)
-      if (once) { q.awaitTermination(); spark.stop() }
-    } else {
-      q.awaitTermination()
-      if (once) spark.stop()
-    }
+    StreamingQueries.gridForwardFillTws(spark, events,
+      a.flags.get("width-minutes").fold(15)(_.toInt),
+      a.flags.getOrElse("watermark", "10 seconds")).toDF()
   }
+  def main(args: Array[String]): Unit = JobRunner.run(job, args)
 }

@@ -96,50 +96,21 @@ object StreamingQueries {
   final case class EwmaState(ewma: Double, n: Long)
   final case class EwmaOut(user_id: Long, n_events: Long, ewma: Double)
 
-  /** Streaming running EWMA per key via mapGroupsWithState — the stream
-    * form of [[graft.operators.TimeSeries.ewma]]'s sequential fold. Each
-    * micro-batch folds its events in (event time, id) order into the
-    * key's constant-size state and emits the updated value (update output
-    * mode). With in-order input the result is bit-identical to the batch
-    * fold; cross-batch OUT-of-order events fold at arrival position — a
-    * sequential reduction cannot retro-fold without replaying, which is
-    * the documented streaming-EWMA tradeoff.
-    */
-  def runningEwma(
-      spark: SparkSession,
-      events: Dataset[EwmaEvent],
-      alpha: Double = 0.2): Dataset[EwmaOut] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[EwmaState, EwmaOut](GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[EwmaEvent], state: GroupState[EwmaState]) =>
-          val sorted = it.toSeq.sortBy(e => (micros(e.utc), e.event_id))
-          var s = state.getOption.getOrElse(EwmaState(0.0, 0L))
-          sorted.foreach { e =>
-            s = if (s.n == 0L) EwmaState(e.value, 1L)
-            else EwmaState(alpha * e.value + (1 - alpha) * s.ewma, s.n + 1L)
-          }
-          state.update(s)
-          EwmaOut(user, s.n, s.ewma)
-      }
-  }
-
-  /** Running EWMA on the Spark 4.x `transformWithState` API — the
-    * successor of [[runningEwma]]'s `mapGroupsWithState` form (which is
-    * soft-deprecated). Same fold, same per-key constant state, plus the
-    * two things the old API lacks that a 100 TB keyed stream needs:
-    * STATE TTL (`ttl` — idle keys expire from the store instead of
+  /** Streaming running EWMA per key on the Spark 4.x `transformWithState`
+    * API — the stream form of [[graft.operators.TimeSeries.ewma]]'s
+    * sequential fold. Each micro-batch folds its events in (event time,
+    * id) order into the key's constant-size state and emits the updated
+    * value (update output mode). With in-order input the result is
+    * bit-identical to the batch fold; cross-batch OUT-of-order events fold
+    * at arrival position — a sequential reduction cannot retro-fold
+    * without replaying, which is the documented streaming-EWMA tradeoff.
+    *
+    * Beyond the fold, the API brings two things a 100 TB keyed stream
+    * needs: STATE TTL (`ttl` — idle keys expire from the store instead of
     * living forever; processing-time TimeMode is what arms it) and named
     * state variables with schema evolution (the `"ewma"` ValueState can
     * gain fields across restarts). Requires the RocksDB state store —
     * the job mains' default ([[graft.Posture.session]]).
-    *
-    * Both forms stay registered: `mapGroupsWithState` remains supported
-    * API surface (its spec doubles as a cross-API parity check — see
-    * StreamingSpec), and the sessionizer migrates the same way when
-    * needed (its event-time timeout maps onto the new API's
-    * `registerTimer`/`handleExpiredTimer`).
     *
     * Caveat (verified in StreamingSpec): with a TTL the query runs in
     * ProcessingTime TimeMode, under which the operator requests another
@@ -168,9 +139,7 @@ object StreamingQueries {
   }
 
   /** The [[runningEwmaTws]] StatefulProcessor: one `ValueState[EwmaState]`
-    * per key, folded in (event time, id) order per micro-batch — identical
-    * arithmetic to the `mapGroupsWithState` form, so the two APIs are
-    * bit-compatible on in-order input.
+    * per key, folded in (event time, id) order per micro-batch.
     */
   final class EwmaProcessor(alpha: Double, ttl: Option[java.time.Duration])
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, EwmaEvent, EwmaOut] {
@@ -206,80 +175,20 @@ object StreamingQueries {
   final case class SessionState(start_us: Long, last_us: Long, n_events: Long)
   final case class SessionOut(user_id: Long, start_us: Long, end_us: Long, n_events: Long)
 
-  /** Custom stateful sessionization via flatMapGroupsWithState (SURVEY.md
-    * §2 "categories with no instance" — the mapGroupsWithState-style op the
-    * engine provides beyond the reference). A session closes when no event
-    * arrives within `gapSeconds` of event time; closed sessions are emitted
-    * on event-time timeout, so output is append-only and state is bounded
-    * by (live keys × one session record).
+  /** Custom stateful sessionization on the Spark 4.x `transformWithState`
+    * API (SURVEY.md §2 "categories with no instance" — the
+    * mapGroupsWithState-style op the engine provides beyond the
+    * reference). A session closes when no event arrives within
+    * `gapSeconds` of event time: inline when a same-key event lands beyond
+    * the gap, else on an event-time timer at last event + gap that fires
+    * when the WATERMARK passes it (`TimeMode.EventTime`), emitting from
+    * `handleExpiredTimer`. Output is append-only and state is bounded by
+    * (live keys × one session record). Event-time timers only fire when
+    * data advances the watermark, so this query drains normally under
+    * `processAllAvailable` (unlike the TTL'd EWMA's processing-time ticks).
     *
     * The batch twin is TimeSeries.sessionize (two window functions); tests
     * assert they agree on session boundaries.
-    */
-  def sessionize(
-      spark: SparkSession,
-      events: Dataset[SessionEvent],
-      gapSeconds: Long = 1800,
-      watermarkDelay: String = "10 seconds"): Dataset[SessionOut] = {
-    import spark.implicits._
-    val gapUs = gapSeconds * 1000000L
-
-    events
-      .withWatermark("utc", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, it: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(user, s.start_us, s.last_us, s.n_events))
-          } else {
-            val sorted = it.toSeq.sortBy(e => (micros(e.utc), e.event_id))
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val us = micros(e.utc)
-              cur match {
-                // within gap of either session edge: merge, extending both
-                // edges (covers cross-batch late events inside the horizon)
-                case Some(s) if us >= s.start_us - gapUs && us <= s.last_us + gapUs =>
-                  cur = Some(SessionState(
-                    s.start_us min us, s.last_us max us, s.n_events + 1))
-                // beyond gap after the session: close it, start a new one
-                case Some(s) if us > s.last_us + gapUs =>
-                  closed ::= SessionOut(user, s.start_us, s.last_us, s.n_events)
-                  cur = Some(SessionState(us, us, 1))
-                // more than gap BEFORE the open session: a straggler from
-                // an earlier, already-gone session — emit it standalone
-                // rather than corrupting the open session's boundaries
-                case Some(_) =>
-                  closed ::= SessionOut(user, us, us, 1)
-                case None =>
-                  cur = Some(SessionState(us, us, 1))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // Close once event time passes last event + gap.
-              state.setTimeoutTimestamp(s.last_us / 1000L + gapSeconds * 1000L)
-            }
-            closed.reverseIterator
-          }
-      }
-  }
-
-  /** The sessionizer on the Spark 4.x `transformWithState` API — the
-    * event-time-timer twin of [[sessionize]] (same merge/close/straggler
-    * semantics; StreamingSpec asserts cross-API agreement). The old API's
-    * `setTimeoutTimestamp` (one implicit self-replacing timeout) maps to
-    * explicit timer management here: each update deletes the key's
-    * previous timer and registers close-at = last event + gap; the timer
-    * fires when the WATERMARK passes it (`TimeMode.EventTime`), emitting
-    * the closed session from `handleExpiredTimer`. Unlike the TTL'd EWMA
-    * (processing-time ticks, never drains), event-time timers only fire
-    * when data advances the watermark, so this query drains normally
-    * under `processAllAvailable`.
     */
   def sessionizeTws(
       spark: SparkSession,
@@ -297,8 +206,7 @@ object StreamingQueries {
   }
 
   /** The [[sessionizeTws]] StatefulProcessor: one `ValueState[SessionState]`
-    * + one live event-time timer per key (constant state per key — the
-    * same bound as the old-API form).
+    * + one live event-time timer per key (constant state per key).
     */
   final class SessionProcessor(gapSeconds: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SessionEvent, SessionOut] {
@@ -361,7 +269,7 @@ object StreamingQueries {
   }
 
   /** Spark's NATIVE session windows on a stream — the built-in
-    * merging-window twin of the custom [[sessionize]]: one
+    * merging-window twin of the custom [[sessionizeTws]]: one
     * `groupBy(session_window(ts, gap))` agg under a watermark, state and
     * window merging managed by the engine. Semantics differences vs the
     * custom sessionizer, documented because they matter at the edges:
@@ -952,23 +860,7 @@ object StreamingQueries {
       watermarkDelay: String = "10 seconds",
       windowSec: Int = 5): Dataset[IntervalMatched] = {
     import spark.implicits._
-    val p = probes
-      .select(col("event_id").as("p_event_id"), col("user_id"),
-        col("utc").as("p_utc"))
-      .withWatermark("p_utc", watermarkDelay)
-    val q = quotes
-      .select(col("event_id").as("q_event_id"), col("user_id").as("q_user_id"),
-        col("utc").as("q_utc"), col("value"))
-      .withWatermark("q_utc", watermarkDelay)
-    p.join(q, expr(
-        s"""user_id = q_user_id AND
-            q_utc >= p_utc - INTERVAL $windowSec SECONDS AND
-            q_utc <= p_utc"""))
-      .select(col("p_event_id").as("event_id"), col("user_id"),
-        unix_micros(col("p_utc")).as("us"),
-        col("q_event_id").as("match_event_id"),
-        col("value").as("match_value"))
-      .as[IntervalMatched]
+    intervalJoin(probes, quotes, watermarkDelay, windowSec, "inner").as[IntervalMatched]
   }
 
   /** LEFT OUTER [[intervalJoinStream]]: probes with no quote in their
@@ -986,7 +878,16 @@ object StreamingQueries {
       probes: Dataset[AsofSideEvent],
       quotes: Dataset[AsofSideEvent],
       watermarkDelay: String = "10 seconds",
-      windowSec: Int = 5): DataFrame = {
+      windowSec: Int = 5): DataFrame =
+    intervalJoin(probes, quotes, watermarkDelay, windowSec, "leftOuter")
+
+  /** The one interval-join body behind both forms; `joinType` is Spark's. */
+  private def intervalJoin(
+      probes: Dataset[AsofSideEvent],
+      quotes: Dataset[AsofSideEvent],
+      watermarkDelay: String,
+      windowSec: Int,
+      joinType: String): DataFrame = {
     val p = probes
       .select(col("event_id").as("p_event_id"), col("user_id"),
         col("utc").as("p_utc"))
@@ -998,7 +899,7 @@ object StreamingQueries {
     p.join(q, expr(
         s"""user_id = q_user_id AND
             q_utc >= p_utc - INTERVAL $windowSec SECONDS AND
-            q_utc <= p_utc"""), "leftOuter")
+            q_utc <= p_utc"""), joinType)
       .select(col("p_event_id").as("event_id"), col("user_id"),
         unix_micros(col("p_utc")).as("us"),
         col("q_event_id").as("match_event_id"),

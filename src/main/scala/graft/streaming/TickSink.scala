@@ -71,16 +71,14 @@ object TickSink {
   final case class ExactlyOnceParquet(path: String, checkpoint: String) extends Sink
   /** Kinesis-shaped batched writer: foreachBatch with a per-batch record
     * cap mirroring `sink.producer.collection-max-count` (tumbling_window
-    * .py:128); `send` stands in for the PutRecords call.
-    */
-  final case class Batched(maxCount: Int, send: Seq[Row] => Unit) extends Sink
-  /** Batched writer with the reference sink's stream-partitioning
-    * semantics: `PARTITIONED BY (ticker)` +
+    * .py:128); `send` stands in for the PutRecords call. It carries the
+    * reference sink's stream-partitioning semantics:
+    * `PARTITIONED BY (ticker)` +
     * `'sink.partitioner-field-delimiter'=';'` (tumbling_window.py:121,127)
     * — each record's stream partition key is its partition-field values
     * joined by the delimiter, and every send carries records of ONE key,
     * at most `maxCount` at a time, batched per Spark partition on the
-    * executors.
+    * executors. No partition fields: one key, plain max-count batches.
     */
   final case class KeyedBatched(
       maxCount: Int,
@@ -100,18 +98,6 @@ object TickSink {
           .option("path", path)
           .option("checkpointLocation", checkpoint)
       case Memory(name) => base.format("memory").queryName(name)
-      case Batched(maxCount, send) =>
-        base.foreachBatch { (batch: DataFrame, _: Long) =>
-          // PutRecords-shaped write: records group and send PER PARTITION
-          // on the executors. Draining through the driver (toLocalIterator)
-          // would pull every record across one process — the
-          // collect-in-hot-path anti-pattern; a real stream writer batches
-          // where the data already is.
-          val (mc, s) = (maxCount, send)
-          batch.rdd.foreachPartition { it: Iterator[Row] =>
-            it.grouped(mc).foreach(g => s(g.toSeq))
-          }
-        }
       case KeyedBatched(maxCount, fields, delim, send) =>
         base.foreachBatch { (batch: DataFrame, _: Long) =>
           val (mc, d, s) = (maxCount, delim, send)

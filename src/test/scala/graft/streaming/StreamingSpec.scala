@@ -3,8 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.{GraftSpec, Posture, Tables}
 import graft.operators.Windows
+import graft.plans.Cbo
 
 /** Streaming tests (SURVEY.md §5.3/5.4): append-mode emission after the
   * watermark passes, late-row drop, batch/stream parity, streaming dedup,
@@ -13,6 +15,10 @@ import graft.operators.Windows
 class StreamingSpec extends GraftSpec {
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+  /** The job mains' state store, for a test's span. */
+  private val RocksDb =
+    Seq("spark.sql.streaming.stateStore.providerClass" -> Posture.RocksDbProvider)
 
   private var nameCounter = 0
   private def freshName(): String = { nameCounter += 1; s"stream_out_$nameCounter" }
@@ -64,10 +70,7 @@ class StreamingSpec extends GraftSpec {
   test("candlestick runs on the RocksDB state store — the job mains' default") {
     // same emission semantics as the heap store, but state lives on local
     // disk: the provider the job mains default to for the 100 TB path
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val input = MemoryStream[String]
       val out = StreamingQueries.candlestick(parsedTicks(input))
       val rows = runStream(input, out, Seq(
@@ -78,9 +81,6 @@ class StreamingSpec extends GraftSpec {
       assert(rows.length === 1, s"exactly the closed window: ${rows.mkString(";")}")
       assert((rows.head.getAs[Double]("first_price"),
         rows.head.getAs[Double]("max_price")) === (10.0, 12.0))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -170,36 +170,14 @@ class StreamingSpec extends GraftSpec {
     assert(rows.length === 2)
   }
 
-  test("stateful sessionize: closes on gap and on event-time timeout") {
+  test("transformWithState sessionize: closes on gap and on event-time timer") {
+    // an event beyond the gap closes the open session inline; otherwise
+    // the event-time timer (registerTimer + handleExpiredTimer) closes it
+    // once the watermark passes last event + gap. Unlike the TTL'd EWMA,
+    // event-time timers fire off the watermark, so processAllAvailable
+    // drains normally. Requires RocksDB, like the mains.
     import StreamingQueries.{SessionEvent, SessionOut}
-    val input = MemoryStream[SessionEvent]
-    val out = StreamingQueries.sessionize(spark, input.toDS(),
-      gapSeconds = 60, watermarkDelay = "0 seconds")
-
-    def ev(id: Long, t: String) = SessionEvent(1L, id, ts(t))
-    val rows = runStream(input, out.toDF(), Seq(
-      Seq(ev(1, "2024-01-01 00:00:00"), ev(2, "2024-01-01 00:00:30")),
-      Seq(ev(3, "2024-01-01 00:02:00")), // gap > 60s -> closes session 1 inline
-      Seq(ev(4, "2024-01-01 00:10:00")) // watermark passes 00:03 -> times out session 2
-    )).map(r => SessionOut(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-
-    def us(t: String) = ts(t).getTime * 1000L
-    assert(rows.toSet === Set(
-      SessionOut(1L, us("2024-01-01 00:00:00"), us("2024-01-01 00:00:30"), 2L),
-      SessionOut(1L, us("2024-01-01 00:02:00"), us("2024-01-01 00:02:00"), 1L)))
-  }
-
-  test("transformWithState sessionize matches the flatMapGroupsWithState form") {
-    // the new-API twin of sessionize: same batches through both APIs must
-    // close the same sessions. Event-time timers (registerTimer +
-    // handleExpiredTimer) replace the old API's setTimeoutTimestamp;
-    // unlike the TTL'd EWMA, event-time timers fire off the watermark, so
-    // processAllAvailable drains normally. Requires RocksDB, like the mains.
-    import StreamingQueries.{SessionEvent, SessionOut}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val input = MemoryStream[SessionEvent]
       val out = StreamingQueries.sessionizeTws(spark, input.toDS(),
         gapSeconds = 60, watermarkDelay = "0 seconds")
@@ -213,18 +191,12 @@ class StreamingSpec extends GraftSpec {
       assert(rows.toSet === Set(
         SessionOut(1L, us("2024-01-01 00:00:00"), us("2024-01-01 00:00:30"), 2L),
         SessionOut(1L, us("2024-01-01 00:02:00"), us("2024-01-01 00:02:00"), 1L)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("streaming dedup-index maintenance equals sequential batch read-check-update runs") {
     import StreamingQueries.DedupDoc
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val dir = java.nio.file.Files.createTempDirectory("graft_dedup_stream").toString
       val base = Seq(
         (100L, "the quick brown fox jumps over the lazy dog tonight"),
@@ -261,9 +233,6 @@ class StreamingSpec extends GraftSpec {
       // and the fixture exercises all three verdict sources: artifact
       // hit (1), fresh (2, 4), prior-micro-batch ratchet hit (3)
       assert(ref === Map(1L -> true, 2L -> false, 3L -> true, 4L -> false))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -405,10 +374,7 @@ class StreamingSpec extends GraftSpec {
 
   test("streaming CUSUM drift alarm equals the ts-ordered Page fold (out-of-order input)") {
     import StreamingQueries.{DriftEvent, DriftAlarm}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val (refQ, slackQ, hQ) = (1000L, 50L, 400L) // ref 10.0, slack 0.5, h 4.0
       def ev(k: String, id: Long, t: String, v: Double) = DriftEvent(k, id, ts(t), v)
       // key a: level 10 then a +3 shift -> S+ grows 250/row, alarms at the
@@ -458,9 +424,6 @@ class StreamingSpec extends GraftSpec {
       assert(expected.exists(_.side == "hi"), "fixture must exercise the hi side")
       assert(expected.exists(_.side == "lo"), "fixture must exercise the lo side")
       assert(rows === expected)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -607,10 +570,7 @@ class StreamingSpec extends GraftSpec {
     // no-prior-quote drop, the equal-ts "<=" match, and the max-event_id
     // tie on equal quote timestamps. Requires RocksDB, like the mains.
     import StreamingQueries.{AsofSideEvent, AsofMatched}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       def ev(u: Long, id: Long, t: String, v: Double) = AsofSideEvent(u, id, ts(t), v)
       // u1: quote tie at 00:00:10 (102 wins), later quote equal to probe 3's
       // ts (the "<=" edge); u2: probe BEFORE any quote -> drops
@@ -662,9 +622,6 @@ class StreamingSpec extends GraftSpec {
       assert(expected.contains(AsofMatched(3L, 1L,
         ts("2024-01-01 00:00:25").getTime * 1000L, 103L, 9.0)), "equal ts -> <=")
       assert(!expected.exists(_.event_id == 2L), "probe before any quote drops")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -675,10 +632,7 @@ class StreamingSpec extends GraftSpec {
     // window are ignored, a user emits exactly once. RocksDB, like the
     // mains.
     import StreamingQueries.{FunnelEvent, FunnelStages}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       def ev(u: Long, t: String, tpe: String) = FunnelEvent(u, tpe, ts(t))
       // u1: full funnel inside the window; u2: purchase BEFORE the click
       // (must not count) then click past the window; u3: orphan click
@@ -730,9 +684,6 @@ class StreamingSpec extends GraftSpec {
       assert(byUser(3L)._2 === ts("2024-01-01 00:00:10"), "u3 late anchor")
       assert(byUser(3L)._3 === ts("2024-01-01 00:00:30"), "u3 claimed click")
       assert(byUser(4L)._3 == null, "u4 view only")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1007,10 +958,7 @@ class StreamingSpec extends GraftSpec {
   test("streaming grid forward-fill equals the batch twin, out of order") {
     // MapState = its own column family -> requires RocksDB, like the mains
     import StreamingQueries.FillEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
     val w = 15 * 60 // bucket width in seconds
     def ev(t: String, off: Int, v: Double) =
       FillEvent(t, java.sql.Timestamp.valueOf(
@@ -1057,20 +1005,12 @@ class StreamingSpec extends GraftSpec {
     val aGap = (1 to 3).map(i => streamed(("a", base + i * widthUs)))
     assert(aGap.forall(_ == ((0L, 2.0, true))),
       s"gap buckets carry (1.25+2.75)/2 = 2.0: $aGap")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("streaming heavy hitters: SpaceSaving bounds hold vs exact replay") {
     // MapState -> RocksDB, like the mains
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val capacity = 16
       val nShards = 4
       val toks = Tables.load(spark, sf, "documents")
@@ -1107,11 +1047,6 @@ class StreamingSpec extends GraftSpec {
           assert(summary.contains(t), s"heavy '$t' (> $threshold) must surface")
         }
       }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1121,10 +1056,7 @@ class StreamingSpec extends GraftSpec {
     // BEFORE it, and a bucket buffered before the restart must emit with
     // its exact pre-restart aggregate
     import StreamingQueries.FillEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val dir = java.nio.file.Files.createTempDirectory("graft_gfr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -1187,11 +1119,6 @@ class StreamingSpec extends GraftSpec {
       }
       assert(got(base + 4 * widthUs) === ((1L, 7.0, false)),
         "bucket buffered before the restart emits with its exact aggregate")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1199,10 +1126,7 @@ class StreamingSpec extends GraftSpec {
     // the bucket-entry ListState is RocksDB state: a near-dup arriving
     // AFTER a restart must still pair with the fingerprint stored BEFORE
     // it — the recovery contract of an ingest-time image dedup
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val dir = java.nio.file.Files.createTempDirectory("graft_phr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -1244,19 +1168,11 @@ class StreamingSpec extends GraftSpec {
           r.getAs[Long]("hamming"))).toSet
       assert(got === Set((1L, 2L, 0L)),
         s"the pre-restart fingerprint must pair with the post-restart twin: $got")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("heavy-hitter summaries survive a checkpoint restart") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val dir = java.nio.file.Files.createTempDirectory("graft_hhr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -1318,20 +1234,12 @@ class StreamingSpec extends GraftSpec {
           assert(summary.contains(t), s"heavy '$t' still surfaces")
         }
       }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("streaming subsequence matcher emits batch-exact window distances") {
     import StreamingQueries.FillEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val w = 15 * 60
       def ev(t: String, off: Int, v: Double) =
         FillEvent(t, java.sql.Timestamp.valueOf(
@@ -1358,11 +1266,6 @@ class StreamingSpec extends GraftSpec {
         ("a", base) -> 0L,
         ("a", base + widthUs) -> (100L * 100 + 100L * 100 + 200L * 200)),
         s"closed windows only, row-frame over observed buckets: $rows")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1439,41 +1342,40 @@ class StreamingSpec extends GraftSpec {
 
   test("streaming running EWMA matches the batch fold bit-for-bit") {
     import StreamingQueries.EwmaEvent
-    val input = MemoryStream[EwmaEvent]
-    val out = StreamingQueries.runningEwma(spark, input.toDS())
-    def ev(u: Long, id: Long, t: String, v: Double) = EwmaEvent(u, id, ts(t), v)
-    val b1 = Seq(ev(1, 1, "2024-01-01 00:00:00", 10.0),
-      ev(1, 2, "2024-01-01 00:01:00", 20.0), ev(2, 3, "2024-01-01 00:01:30", 5.0))
-    val b2 = Seq(ev(1, 4, "2024-01-01 00:02:00", 30.0))
-    val name = freshName()
-    val q = out.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name).start()
-    try {
-      Seq(b1, b2).foreach { b => input.addData(b); q.processAllAvailable() }
-    } finally q.stop()
-    // latest state per user = the row with that user's max n_events
-    val got = spark.table(name).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
-    val batch = graft.operators.TimeSeries.ewma(
-      (b1 ++ b2).map(e => (e.user_id, e.event_id, e.value, e.utc))
-        .toDF("user_id", "event_id", "value", "ts")).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(got.keySet === batch.keySet)
-    got.foreach { case (u, (_, n, e)) =>
-      assert((n, e) === batch(u), s"user $u")
+    Cbo.withConfs(spark, RocksDb) {
+      val input = MemoryStream[EwmaEvent]
+      val out = StreamingQueries.runningEwmaTws(spark, input.toDS())
+      def ev(u: Long, id: Long, t: String, v: Double) = EwmaEvent(u, id, ts(t), v)
+      val b1 = Seq(ev(1, 1, "2024-01-01 00:00:00", 10.0),
+        ev(1, 2, "2024-01-01 00:01:00", 20.0), ev(2, 3, "2024-01-01 00:01:30", 5.0))
+      val b2 = Seq(ev(1, 4, "2024-01-01 00:02:00", 30.0))
+      val name = freshName()
+      val q = out.toDF().writeStream
+        .outputMode("update").format("memory").queryName(name).start()
+      try {
+        Seq(b1, b2).foreach { b => input.addData(b); q.processAllAvailable() }
+      } finally q.stop()
+      // latest state per user = the row with that user's max n_events
+      val got = spark.table(name).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
+      val batch = graft.operators.TimeSeries.ewma(
+        (b1 ++ b2).map(e => (e.user_id, e.event_id, e.value, e.utc))
+          .toDF("user_id", "event_id", "value", "ts")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      assert(got.keySet === batch.keySet)
+      got.foreach { case (u, (_, n, e)) =>
+        assert((n, e) === batch(u), s"user $u")
+      }
     }
   }
 
-  test("transformWithState running EWMA matches the mapGroupsWithState form") {
-    // the new-API twin of runningEwma: same fold on the same batches must
-    // produce the same final state per key (cross-API parity). Requires
-    // the RocksDB state store, like the job mains.
+  test("transformWithState running EWMA equals the hand-computed recurrence") {
+    // the fold across two micro-batches, checked against the EWMA
+    // recurrence written out by hand. Requires the RocksDB state store,
+    // like the job mains.
     import StreamingQueries.EwmaEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val input = MemoryStream[EwmaEvent]
       val out = StreamingQueries.runningEwmaTws(spark, input.toDS())
       def ev(u: Long, id: Long, t: String, v: Double) = EwmaEvent(u, id, ts(t), v)
@@ -1491,9 +1393,6 @@ class StreamingSpec extends GraftSpec {
         .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
       assert(got(1L) === ((1L, 3L, 0.2 * 30.0 + 0.8 * (0.2 * 20.0 + 0.8 * 10.0))))
       assert(got(2L) === ((2L, 1L, 5.0)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1507,10 +1406,7 @@ class StreamingSpec extends GraftSpec {
     // Two runs over one checkpoint prove the RocksDB state survives a
     // restart (the TTL has not elapsed, so the fold must resume, not reset).
     import StreamingQueries.EwmaEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val ckpt = java.nio.file.Files.createTempDirectory("tws-ttl").toString
       val input = MemoryStream[EwmaEvent]
       val out = StreamingQueries.runningEwmaTws(
@@ -1543,9 +1439,6 @@ class StreamingSpec extends GraftSpec {
       runUntilEvent(2L)
       val last = buf.synchronized(buf.maxBy(_._2))
       assert(last === ((7L, 2L, 0.2 * 8.0 + 0.8 * 4.0)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1562,10 +1455,7 @@ class StreamingSpec extends GraftSpec {
       "c2d1" -> Scd2Event(2L, ts("2024-01-01 09:00:00"), 11L, "P9"),
       "c2d3" -> Scd2Event(2L, ts("2024-01-03 09:00:00"), 31L, "P8"),
       "flush" -> Scd2Event(99L, ts("2024-01-10 00:00:00"), 90L, "PX"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val input = MemoryStream[Scd2Event]
       val out = StreamingQueries.scd2Stream(
         spark, input.toDS(), watermarkDelay = "2 hours").toDF()
@@ -1599,9 +1489,6 @@ class StreamingSpec extends GraftSpec {
         (1L, 2, "P3", "2024-01-02", "2024-01-04"),
         (2L, 1, "P9", "2024-01-01", "2024-01-03")),
         s"hand-walked versions: $got")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1750,7 +1637,7 @@ class StreamingSpec extends GraftSpec {
     val sends = spark.sparkContext.collectionAccumulator[(Int, Int)]("sends")
     val q = TickSink.start(
       TickSource.fileJson(spark, dir, "SQL").repartition(3),
-      TickSink.Batched(3, rows => sends.add(
+      TickSink.KeyedBatched(3, Nil, ";", (_, rows) => sends.add(
         (org.apache.spark.TaskContext.getPartitionId(), rows.size))),
       availableNow = true)
     q.awaitTermination(30000)
@@ -1908,10 +1795,7 @@ class StreamingSpec extends GraftSpec {
       5L -> "2024-01-01 00:00:04", 6L -> "2024-01-01 00:00:03")
     def doc(id: Long) = SimhashDoc(id, corpus.toMap.apply(id),
       java.sql.Timestamp.valueOf(times(id)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val input = MemoryStream[SimhashDoc]
       val out = StreamingQueries.simhashPairsStream(spark, input.toDS()).toDF()
       // delivery order deliberately violates event-time order (doc 2, the
@@ -1927,9 +1811,6 @@ class StreamingSpec extends GraftSpec {
       assert(got === batch, "stream pairs must equal the batch operator's")
       assert(got.contains((1L, 2L, 0L)), "identical docs pair at hamming 0")
       assert(got.size >= 3, s"the clustered corpus must yield its near-dups: $got")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1959,10 +1840,7 @@ class StreamingSpec extends GraftSpec {
       5L -> "2024-01-01 00:00:03")
     def doc(id: Long) = SimhashDoc(id, corpus.toMap.apply(id),
       java.sql.Timestamp.valueOf(times(id)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Posture.RocksDbProvider)
-    try {
+    Cbo.withConfs(spark, RocksDb) {
       val input = MemoryStream[SimhashDoc]
       val out = StreamingQueries.phashPairsStream(spark, input.toDS()).toDF()
       val rows = runStream(input, out,
@@ -1974,9 +1852,6 @@ class StreamingSpec extends GraftSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got === batch, "stream pairs must equal the batch operator's")
       assert(got.contains((1L, 2L, 0L)), "identical images pair at hamming 0")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -2100,5 +1975,172 @@ class StreamingSpec extends GraftSpec {
     assert(rows.forall { r => val p = r.getAs[Double]("price"); p >= 0 && p < 100 })
     // seeded determinism
     assert(TickSource.syntheticBatch(spark, 8).collect().toSeq === rows.toSeq)
+  }
+
+  // ---- the job mains, driven through the one job lifecycle ----------------
+
+  /** Run `job` through [[JobRunner.start]] with `--once` into a fresh
+    * `parquet:` sink on the mains' RocksDB store, checking it registered
+    * its view. Returns the sink's output directory and the query.
+    */
+  private def runJob(job: JobRunner.Job, args: String*): (String, StreamingQuery) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_job").toString
+    spark.catalog.dropTempView(job.view)
+    val q = Cbo.withConfs(spark, RocksDb) {
+      val q = JobRunner.start(spark, job,
+        (args.toSeq ++ Seq(s"parquet:$dir/out:$dir/ckpt", "--once")).toArray)
+      try q.awaitTermination() finally q.stop()
+      q
+    }
+    assert(spark.catalog.tableExists(job.view), s"${job.main} registers ${job.view}")
+    (s"$dir/out", q)
+  }
+
+  /** The `col=` directory names directly under a parquet sink's output. */
+  private def partitionDirs(out: String): Set[String] =
+    new java.io.File(out).list().filter(_.contains("=")).map(_.takeWhile(_ != '=')).toSet
+
+  private def writeLines(dir: String, lines: Seq[String]): String = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.json"),
+      lines.mkString("\n").getBytes("UTF-8"))
+    dir
+  }
+
+  test("tick job mains: closed windows equal their Windows batch twins, partitioned by ticker") {
+    val in = writeLines(
+      java.nio.file.Files.createTempDirectory("graft_ticks").toString + "/in",
+      for (i <- 0 until 36; t <- Seq("AAPL", "MSFT")) yield {
+        val utc = f"2024-01-01 00:${i * 10 / 60}%02d:${i * 10 % 60}%02d.000"
+        s"""{"utc":"$utc","ticker":"$t","price":${(i * 37 + t.length * 11) % 97}.25}"""
+      })
+    val conf = JobConfig.load("conf/application_properties.json")
+    val ticks = TickSource.fileJsonBatch(spark, in, conf.timestampStandard)
+    Seq(
+      TumblingWindowJob.job -> ((Windows.candlestick(ticks, tsCol = "utc",
+        keyCol = "ticker", valCol = "price"), "window_end")),
+      SlidingWindowJob.job -> ((Windows.slidingMin(ticks, tsCol = "utc",
+        keyCol = "ticker", valCol = "price", over = conf.windowOver,
+        every = conf.windowEvery), "t"))
+    ).foreach { case (job, (twin, endCol)) =>
+      val (out, q) = runJob(job, "conf/application_properties.json", in)
+      assert(partitionDirs(out) === Set("ticker"), job.main)
+      val wm = q.recentProgress.flatMap(p => Option(p.eventTime.get("watermark")))
+        .map(w => java.sql.Timestamp.from(java.time.Instant.parse(w))).max
+      val closed = twin.where(col(endCol) <= lit(wm))
+      val got = spark.read.parquet(out).select(twin.columns.map(col).toIndexedSeq: _*)
+      assert(closed.count() > 0 && got.count() === closed.count(), job.main)
+      assert(got.exceptAll(closed).isEmpty && closed.exceptAll(got).isEmpty, job.main)
+    }
+  }
+
+  test("DocPipelineJob writes curated docs partitioned by lang_pred, honouring --min-score") {
+    val in = writeLines(
+      java.nio.file.Files.createTempDirectory("graft_docs").toString + "/in",
+      Seq(
+        (1L, "the cat sat on the mat and it is in the house for a nap", "en"),
+        (2L, "the cat sat on the mat and it is in the house for a nap", "en"),
+        (3L, "a dog ran to the park and it is fast on the grass", "en"),
+        (4L, "der hund und die katze ist nicht mit ich zu das haus", "de"),
+        (5L, "12345 67890", "en")
+      ).map { case (id, t, l) =>
+        s"""{"doc_id":$id,"text":"$t","lang":"$l","source":"web"}"""
+      })
+    // the batch form of the curation chain (batch frames take plain dedup)
+    val expected = graft.operators.TextAnalysis.enrich(
+        spark.read.schema(DocPipeline.docSchema).json(in))
+      .dropDuplicates("fp").filter(col("quality_score") >= 0.2)
+      .select("lang_pred", "fp").collect().toSet
+    val (out, _) = runJob(DocPipelineJob.job, in, "--min-score=0.2")
+    assert(partitionDirs(out) === Set("lang_pred"))
+    val got = spark.read.parquet(out)
+    assert(got.select("lang_pred", "fp").collect().toSet === expected)
+    assert(expected.map(_.getString(0)) === Set("en", "de"),
+      "the German doc passes only at the flag's 0.2, not the 0.3 default")
+    assert(got.count() === 3L, "one of the exact duplicates and the digits-only doc drop")
+  }
+
+  test("NearDupJob writes its pair stream unpartitioned through a parquet sink") {
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val in = writeLines(
+      java.nio.file.Files.createTempDirectory("graft_neardup").toString + "/in",
+      Seq(
+        s"""{"doc_id":1,"text":"$text","utc":"2024-01-01T00:00:01"}""",
+        """{"doc_id":5,"text":"another unrelated document body entirely disjoint","utc":"2024-01-01T00:00:02"}""",
+        s"""{"doc_id":2,"text":"$text","utc":"2024-01-01T00:00:03"}"""))
+    val (out, _) = runJob(NearDupJob.job, in)
+    assert(partitionDirs(out).isEmpty)
+    val got = spark.read.parquet(out)
+    assert(got.columns.toSeq === Seq("doc_a", "doc_b", "hamming", "pair_ts"))
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ===
+      Set((1L, 2L, 0L)))
+  }
+
+  test("GridFillJob writes its bucket grid partitioned by event_type") {
+    val in = writeLines(
+      java.nio.file.Files.createTempDirectory("graft_gridfill").toString + "/in",
+      // the last pair only advances the watermark past bucket 4
+      Seq(("a", "00:01:40", 2.0), ("a", "00:03:20", 4.0), ("b", "00:02:00", 5.0),
+        ("a", "01:01:40", 7.0), ("b", "01:01:40", 1.0),
+        ("a", "01:31:40", 9.0), ("b", "01:31:40", 9.0)).map { case (t, hms, v) =>
+        s"""{"event_type":"$t","utc":"2024-01-01T$hms","value":$v}"""
+      })
+    val (out, _) = runJob(GridFillJob.job, in, "--watermark=0 seconds")
+    assert(partitionDirs(out) === Set("event_type"))
+    val got = spark.read.parquet(out).collect()
+      .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("bus")) ->
+        (r.getAs[Long]("n_events"), r.getAs[Double]("value_filled"), r.getAs[Boolean]("filled")))
+      .toMap
+    val widthUs = 15L * 60 * 1000000L
+    val base = ts("2024-01-01 00:00:00").getTime * 1000L
+    // per type: observed bucket 0, carried gaps 1..3, observed bucket 4
+    assert(got.size === 10, got.toString)
+    Seq(("a", 2L, 3.0, 7.0), ("b", 1L, 5.0, 1.0)).foreach { case (t, n0, avg0, v4) =>
+      assert(got((t, base)) === ((n0, avg0, false)), t)
+      (1 to 3).foreach { i =>
+        assert(got((t, base + i * widthUs)) === ((0L, avg0, true)), s"$t gap $i")
+      }
+      assert(got((t, base + 4 * widthUs)) === ((1L, v4, false)), t)
+    }
+  }
+
+  test("job mains reject an unknown flag and a missing argument before any query starts") {
+    val active = spark.streams.active.length
+    val unknown = intercept[IllegalArgumentException] {
+      JobRunner.start(spark, DocPipelineJob.job, Array("/nonexistent", "--min_score=0.5"))
+    }
+    assert(unknown.getMessage.contains("DocPipelineJob") &&
+      unknown.getMessage.contains("--min_score=0.5") &&
+      unknown.getMessage.contains("usage:") && unknown.getMessage.contains("--min-score="),
+      unknown.getMessage)
+    val missing = intercept[IllegalArgumentException] {
+      JobRunner.start(spark, TumblingWindowJob.job, Array("conf/application_properties.json"))
+    }
+    assert(missing.getMessage.contains("TumblingWindowJob") &&
+      missing.getMessage.contains("<inputDir>"), missing.getMessage)
+    assert(spark.streams.active.length === active)
+  }
+
+  test("only JobRunner builds a session, parses a sink spec or awaits a query under graft/streaming") {
+    val owned = Seq("Posture.session()", "awaitTermination(", "parseSink(")
+    def code(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("/*")) "" else t.split("//", 2)(0)
+    }
+    val root = java.nio.file.Paths.get("src/main/scala/graft/streaming")
+    val offenders = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        java.nio.file.Files.list(root).iterator()).asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "Jobs.scala")
+      .flatMap { p =>
+        scala.jdk.CollectionConverters.ListHasAsScala(java.nio.file.Files.readAllLines(p))
+          .asScala.map(code).flatMap(l => owned.filter(l.contains)).map(o => s"${p.getFileName}: $o")
+      }.toSeq
+    assert(offenders.isEmpty, s"job lifecycle outside JobRunner: ${offenders.mkString(", ")}")
+    val jobs = scala.jdk.CollectionConverters.ListHasAsScala(
+      java.nio.file.Files.readAllLines(root.resolve("Jobs.scala"))).asScala.map(code)
+    Seq("Posture.session()", "awaitTermination(").foreach { o =>
+      assert(jobs.count(_.contains(o)) === 1, s"$o once, in JobRunner.run")
+    }
   }
 }
