@@ -245,7 +245,8 @@ object Bench {
         s""""load_start":$loadStart,"load_end":$loadEnd,""" +
         s""""cores":${Posture.cores},""" +
         s""""codegen_cache_entries":${Posture.codegenCacheEntries},""" +
-        s""""stats":"$stats"}"""
+        s""""stats":"$stats",""" +
+        Posture.ioEnv(spark).map { case (k, v) => s""""$k":"$v"""" }.mkString(",") + "}"
     // The batch readout prints BEFORE the streaming section runs: the
     // driver's r7 artifact came back rc 124 / parsed:null because a timeout
     // inside the streaming bench killed the process before the (then

@@ -1,5 +1,8 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.AbstractFileSystem
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
@@ -19,6 +22,18 @@ import scala.util.control.NonFatal
   *     generated source, so the size is scale-independent. `=100`
   *     restores the Spark default for A/B; results are unaffected.
   *   - `SPARK_GRAFT_STATS` (on): see [[statsOn]]; `=0` opts out.
+  *
+  * Local file I/O ([[streamingIo]], plus `fs.file.impl` in [[builder]])
+  * is a constant, not a knob. Without the native `libhadoop`,
+  * Hadoop's `file:` filesystem forks `chmod` on every file it creates and
+  * `readlink` on every `FileContext` rename. On a 4-CPU host a JFR
+  * recording of one live tick benchmark run logged 3,101 process spawns
+  * (129 per trigger), and a `FileContext` create+rename of a 200-byte
+  * file took 30-33 ms against 0.4-0.8 ms on [[NioLocalFs]].
+  * [[NioLocalFs]] / [[NioLocalFileSystem]] do those two calls through
+  * `java.nio` and keep Hadoop's checksums and rename semantics. [[graft.streaming.TickSink.start]] sets [[streamingIo]] on
+  * the query's own session too, so a session built elsewhere (a harness,
+  * a notebook) checkpoints the same way.
   */
 object Posture {
 
@@ -32,6 +47,35 @@ object Posture {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  val CheckpointFsConf = "fs.AbstractFileSystem.file.impl"
+  val ChangelogConf =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** Session confs for every streaming query's checkpoint I/O:
+    *   - `fs.AbstractFileSystem.file.impl` → [[NioLocalFs]], the `file:`
+    *     stack behind Spark's `FileContext` checkpoint manager (offset WAL,
+    *     commit log, file-source log, state-store files). Session confs
+    *     are overlaid onto every `newHadoopConf`, and `AbstractFileSystem`
+    *     instances are not cached, so the next `FileContext` picks it up.
+    *   - RocksDB changelog checkpointing: a state-store commit writes one
+    *     small changelog file per partition; the SST copy + zip snapshot
+    *     (copied through the JVM-cached `FileSystem`, which a session not
+    *     built here leaves forking) moves to background maintenance every
+    *     `minDeltasForSnapshot` versions.
+    */
+  val streamingIo: Seq[(String, String)] = Seq(
+    CheckpointFsConf -> classOf[NioLocalFs].getName,
+    ChangelogConf -> "true")
+
+  /** The local I/O posture in force on `spark`, for a run's own output:
+    * `checkpoint_fs`, the `AbstractFileSystem` class its `file:`
+    * `FileContext` resolves to, and `rocksdb_changelog`.
+    */
+  def ioEnv(spark: SparkSession): Seq[(String, String)] = Seq(
+    "checkpoint_fs" -> AbstractFileSystem.get(
+      URI.create("file:///"), spark.sessionState.newHadoopConf()).getClass.getName,
+    "rocksdb_changelog" -> spark.conf.get(ChangelogConf, "false"))
+
   lazy val cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   lazy val codegenCacheEntries: Int =
@@ -44,10 +88,15 @@ object Posture {
     * the engine's time semantics are instant-based UTC (see
     * [[Tables.load]]). INT64 micros parquet timestamps (not INT96), so
     * DuckDB reads written results as the same type and values its oracle
-    * produces.
+    * produces. Local file I/O: [[streamingIo]], plus the fork-free
+    * `FileSystem` [[NioLocalFileSystem]] for parquet, CDC and stats
+    * writes; `FileSystem` instances are cached per JVM, so that one is set
+    * here, where the session and its first `FileSystem` are built.
     */
   def builder(localCores: Int = cores): SparkSession.Builder =
     SparkSession.builder()
+      .config(streamingIo.toMap)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .master(s"local[$localCores]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", localCores.toString)

@@ -147,8 +147,16 @@ object TickSink {
     if (availableNow) w.trigger(Trigger.AvailableNow()) else w
   }
 
-  def start(df: DataFrame, sink: Sink, availableNow: Boolean = false): StreamingQuery =
+  /** Start the query with [[graft.Posture.streamingIo]] set on the
+    * DataFrame's session first, so a session Posture did not build
+    * checkpoints fork-free too. The confs stay set: the file source builds
+    * its metadata log from this session on the stream thread at the first
+    * trigger, after `start()` has returned.
+    */
+  def start(df: DataFrame, sink: Sink, availableNow: Boolean = false): StreamingQuery = {
+    graft.Posture.streamingIo.foreach { case (k, v) => df.sparkSession.conf.set(k, v) }
     writer(df, sink, availableNow).start()
+  }
 
   /** The read side of [[ExactlyOnceParquet]]: only batch directories whose
     * manifest marker exists are visible — a crash between data files and

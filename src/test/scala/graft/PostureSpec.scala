@@ -3,6 +3,9 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileContext, FileSystem}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
 /** The one session posture: its stats degrade path, and the rule that no
   * other main builds a session of its own.
   */
@@ -28,6 +31,36 @@ class PostureSpec extends GraftSpec {
       }
       Files.delete(Paths.get(empty))
     }
+  }
+
+  test("a Posture-built session checkpoints through the fork-free file: stack, changelog on") {
+    val fc = FileContext.getLocalFSFileContext(spark.sessionState.newHadoopConf())
+    assert(fc.getDefaultFileSystem.isInstanceOf[NioLocalFs])
+    assert(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).getRaw
+      .isInstanceOf[NioRawLocalFileSystem])
+    assert(spark.conf.get(Posture.ChangelogConf) === "true")
+    assert(Posture.ioEnv(spark).toMap === Map(
+      "checkpoint_fs" -> classOf[NioLocalFs].getName, "rocksdb_changelog" -> "true"))
+  }
+
+  test("TickSink.start puts the streaming I/O confs back on a session that lost them") {
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val keys = Posture.streamingIo.map(_._1)
+    keys.foreach(spark.conf.unset)
+    try {
+      assert(Posture.ioEnv(spark).toMap ===
+        Map("checkpoint_fs" -> classOf[org.apache.hadoop.fs.local.LocalFs].getName,
+          "rocksdb_changelog" -> "false"))
+      val input = MemoryStream[Int]
+      val q = streaming.TickSink.start(input.toDF(), streaming.TickSink.Noop)
+      try {
+        input.addData(1, 2)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(keys.map(spark.conf.getOption) === Posture.streamingIo.map(kv => Some(kv._2)))
+      assert(Posture.ioEnv(spark).head === ("checkpoint_fs" -> classOf[NioLocalFs].getName))
+    } finally Posture.streamingIo.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("only Posture.scala builds a SparkSession under src/main/scala") {

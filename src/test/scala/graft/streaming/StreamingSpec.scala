@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import scala.jdk.CollectionConverters._
 import graft.{GraftSpec, Posture, Tables}
 import graft.operators.Windows
 import graft.plans.Cbo
@@ -1550,6 +1551,70 @@ class StreamingSpec extends GraftSpec {
     // kinesis-sink stand-in contract: output is partitioned by ticker
     assert(Files.exists(Paths.get(s"$out/ticker=AAPL")))
     assert(Files.exists(Paths.get(s"$out/ticker=MSFT")))
+  }
+
+  test("reference candlestick survives a restart and a changelog replay on RocksDB") {
+    // through TickSink.start, so RocksDB commits changelog files
+    // (Posture.streamingIo): run 1 stops after three file batches, run 2
+    // restarts as-is, run 3 restarts with the last commit record deleted,
+    // so that batch re-runs on state rebuilt from the changelog. No-data
+    // batches are off so that the torn last batch is a data batch.
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    val dir = Files.createTempDirectory("graft_cdl").toString
+    val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
+    Files.createDirectories(Paths.get(in))
+    def writeMinute(m: Int): Unit = {
+      val p = Paths.get(f"$in/m$m%02d.json")
+      Files.write(p, (for (s <- 0 until 60 by 7; t <- Seq("AAPL", "MSFT")) yield {
+        val price = (m * 31 + s * 7 + t.length) % 89
+        f"""{"utc":"2024-01-01 00:$m%02d:$s%02d.000","ticker":"$t","price":$price.5}"""
+      }).mkString("\n").getBytes("UTF-8"))
+      Files.setLastModifiedTime(p, FileTime.fromMillis(1000000L + m * 10000L))
+    }
+    // every attempt's progress: the checkpoint lock of the previous run is
+    // released on the listener bus, so a restart may need a retry
+    def runOnce(attempts: Int = 40): Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
+      val ticks = TickSource.fileJson(spark, in, "SQL", maxFilesPerTrigger = Some(1))
+      val q = TickSink.start(StreamingQueries.candlestick(ticks),
+        TickSink.PartitionedParquet(out, ckpt), availableNow = true)
+      try { q.awaitTermination(); q.stop(); q.recentProgress.toSeq }
+      catch {
+        case e: org.apache.spark.sql.streaming.StreamingQueryException
+          if e.getMessage.contains("concurrently using") && attempts > 0 =>
+          Thread.sleep(250); q.recentProgress.toSeq ++ runOnce(attempts - 1)
+      }
+    }
+    def lastCommit(): java.io.File = new java.io.File(s"$ckpt/commits").listFiles()
+      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+    val runs = Cbo.withConfs(spark,
+      RocksDb :+ ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) {
+      (0 until 3).foreach(writeMinute)
+      val first = runOnce()
+      (3 until 5).foreach(writeMinute)
+      val second = runOnce()
+      val torn = lastCommit()
+      assert(torn.delete())
+      writeMinute(5)
+      val third = runOnce()
+      // the replayed batch reports no progress; its commit record does
+      assert(torn.exists(), "run 3 re-ran and re-committed the torn batch")
+      assert(third.map(p => (p.batchId, p.numInputRows)) ===
+        Seq((torn.getName.toLong + 1, 18L)), "then ran the new file's batch")
+      Seq(first, second, third)
+    }
+    val changelogs = Files.walk(Paths.get(s"$ckpt/state")).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".changelog"))
+    assert(changelogs > 0, "RocksDB commits wrote changelog files")
+    val wm = runs.flatten.flatMap(p => Option(p.eventTime.get("watermark")))
+      .map(w => java.sql.Timestamp.from(java.time.Instant.parse(w))).max
+    val twin = Windows.candlestick(TickSource.fileJsonBatch(spark, in), tsCol = "utc",
+      keyCol = "ticker", valCol = "price")
+    val closed = twin.where(col("window_end") <= lit(wm))
+    val got = spark.read.parquet(out).select(twin.columns.map(col).toIndexedSeq: _*)
+    assert(closed.count() >= 6, "at least minutes 0-2 closed for both tickers")
+    assert(got.count() === closed.count(), "no window emitted twice")
+    assert(got.exceptAll(closed).isEmpty && closed.exceptAll(got).isEmpty)
   }
 
   test("exactly-once sink: replay after a torn commit writes no duplicate rows") {
