@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
@@ -246,7 +247,7 @@ object Bench {
         s""""cores":${Posture.cores},""" +
         s""""codegen_cache_entries":${Posture.codegenCacheEntries},""" +
         s""""stats":"$stats",""" +
-        Posture.ioEnv(spark).map { case (k, v) => s""""$k":"$v"""" }.mkString(",") + "}"
+        Posture.streamingEnv(spark).map { case (k, v) => s""""$k":"$v"""" }.mkString(",") + "}"
     // The batch readout prints BEFORE the streaming section runs: the
     // driver's r7 artifact came back rc 124 / parsed:null because a timeout
     // inside the streaming bench killed the process before the (then
@@ -425,14 +426,20 @@ object Bench {
     val streamReps =
       if (scale < 1.0) 1
       else math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_STREAM_REPS", "2").toInt)
+    // `*_codegen_compiles` counts the Janino compiles over all of a
+    // section's reps: the first query of a plan shape compiles, a repeat
+    // of it should not (Posture's artifact-isolation conf).
     def one(name: String, f: => (Double, Double, Double)): Seq[(String, Double)] = {
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val outcomes = (1 to streamReps).map { _ =>
         try f catch { case NonFatal(_) => (-1.0, -1.0, -1.0) }
       }
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       val ok = outcomes.filter(_._1 >= 0)
       val best = if (ok.isEmpty) (-1.0, -1.0, -1.0) else ok.maxBy(_._1)
       Seq(s"${name}_rps" -> best._1, s"${name}_state_rows" -> best._2,
-        s"${name}_state_bytes" -> best._3) ++
+        s"${name}_state_bytes" -> best._3,
+        s"${name}_codegen_compiles" -> compiles.toDouble) ++
         (if (streamReps > 1)
           outcomes.zipWithIndex.map { case (o, i) => s"${name}_rps_rep${i + 1}" -> o._1 }
         else Seq.empty)

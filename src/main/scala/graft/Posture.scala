@@ -23,17 +23,34 @@ import scala.util.control.NonFatal
   *     restores the Spark default for A/B; results are unaffected.
   *   - `SPARK_GRAFT_STATS` (on): see [[statsOn]]; `=0` opts out.
   *
-  * Local file I/O ([[streamingIo]], plus `fs.file.impl` in [[builder]])
-  * is a constant, not a knob. Without the native `libhadoop`,
-  * Hadoop's `file:` filesystem forks `chmod` on every file it creates and
-  * `readlink` on every `FileContext` rename. On a 4-CPU host a JFR
-  * recording of one live tick benchmark run logged 3,101 process spawns
-  * (129 per trigger), and a `FileContext` create+rename of a 200-byte
-  * file took 30-33 ms against 0.4-0.8 ms on [[NioLocalFs]].
-  * [[NioLocalFs]] / [[NioLocalFileSystem]] do those two calls through
-  * `java.nio` and keep Hadoop's checksums and rename semantics. [[graft.streaming.TickSink.start]] sets [[streamingIo]] on
-  * the query's own session too, so a session built elsewhere (a harness,
-  * a notebook) checkpoints the same way.
+  * The streaming confs ([[streamingConfs]]) are constants, not knobs.
+  * [[builder]] sets them at session creation and
+  * [[graft.streaming.TickSink.start]] sets them on the query's own session
+  * too, so a session built elsewhere (a harness, a notebook) runs its
+  * queries the same way. Two costs they remove:
+  *   - Local file I/O ([[streamingConfs]], plus `fs.file.impl` in
+  *     [[builder]]). Without the native `libhadoop`, Hadoop's `file:`
+  *     filesystem forks `chmod` on every file it creates and `readlink` on
+  *     every `FileContext` rename. On a 4-CPU host a JFR recording of one
+  *     live tick benchmark run logged 3,101 process spawns (129 per
+  *     trigger), and a `FileContext` create+rename of a 200-byte file took
+  *     30-33 ms against 0.4-0.8 ms on [[NioLocalFs]]. [[NioLocalFs]] /
+  *     [[NioLocalFileSystem]] do those two calls through `java.nio` and keep
+  *     Hadoop's checksums and rename semantics.
+  *   - Codegen recompiles per query start. Every streaming query runs on a
+  *     clone of its session, and with artifact isolation on (Spark's
+  *     default) every session gets its own executor class loader. The
+  *     codegen cache is keyed on (context class loader, generated source),
+  *     so each new query, whether a drain, a restart or a benchmark rep,
+  *     compiled all of its task-side code again: 14-15 Janino compiles and
+  *     163-601 ms of compile time per reference-job drain on a 4-CPU host,
+  *     with a stage's tasks queued on the same compile lock. Isolation only
+  *     separates session artifacts (`addArtifact` jars and classes, a Spark
+  *     Connect feature), and this engine adds none, so it is off: every
+  *     session's tasks share the executor's one loader, and a repeated or
+  *     restarted query compiles nothing. Generated classes that are reused
+  *     also keep their JIT-compiled code: over 10 alternating benchmark
+  *     pairs, tick-drain throughput went from 72.6k to 112.2k ticks/s.
   */
 object Posture {
 
@@ -51,7 +68,9 @@ object Posture {
   val ChangelogConf =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  /** Session confs for every streaming query's checkpoint I/O:
+  val ArtifactIsolationConf = "spark.sql.artifact.isolation.enabled"
+
+  /** Session confs every streaming query starts with:
     *   - `fs.AbstractFileSystem.file.impl` → [[NioLocalFs]], the `file:`
     *     stack behind Spark's `FileContext` checkpoint manager (offset WAL,
     *     commit log, file-source log, state-store files). Session confs
@@ -62,19 +81,27 @@ object Posture {
     *     (copied through the JVM-cached `FileSystem`, which a session not
     *     built here leaves forking) moves to background maintenance every
     *     `minDeltasForSnapshot` versions.
+    *   - Artifact isolation off: the query's tasks run under the
+    *     executor's shared class loader, so generated classes cached by an
+    *     earlier query are hits. The conf is not static, and a query's
+    *     cloned session reads it when its first job runs, so setting it on
+    *     a running session is enough.
     */
-  val streamingIo: Seq[(String, String)] = Seq(
+  val streamingConfs: Seq[(String, String)] = Seq(
     CheckpointFsConf -> classOf[NioLocalFs].getName,
-    ChangelogConf -> "true")
+    ChangelogConf -> "true",
+    ArtifactIsolationConf -> "false")
 
-  /** The local I/O posture in force on `spark`, for a run's own output:
+  /** The streaming posture in force on `spark`, for a run's own output:
     * `checkpoint_fs`, the `AbstractFileSystem` class its `file:`
-    * `FileContext` resolves to, and `rocksdb_changelog`.
+    * `FileContext` resolves to, `rocksdb_changelog`, and
+    * `artifact_isolation` (Spark's default is `true`).
     */
-  def ioEnv(spark: SparkSession): Seq[(String, String)] = Seq(
+  def streamingEnv(spark: SparkSession): Seq[(String, String)] = Seq(
     "checkpoint_fs" -> AbstractFileSystem.get(
       URI.create("file:///"), spark.sessionState.newHadoopConf()).getClass.getName,
-    "rocksdb_changelog" -> spark.conf.get(ChangelogConf, "false"))
+    "rocksdb_changelog" -> spark.conf.get(ChangelogConf, "false"),
+    "artifact_isolation" -> spark.conf.get(ArtifactIsolationConf, "true"))
 
   lazy val cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
@@ -88,14 +115,14 @@ object Posture {
     * the engine's time semantics are instant-based UTC (see
     * [[Tables.load]]). INT64 micros parquet timestamps (not INT96), so
     * DuckDB reads written results as the same type and values its oracle
-    * produces. Local file I/O: [[streamingIo]], plus the fork-free
+    * produces. Streaming: [[streamingConfs]], plus the fork-free
     * `FileSystem` [[NioLocalFileSystem]] for parquet, CDC and stats
     * writes; `FileSystem` instances are cached per JVM, so that one is set
     * here, where the session and its first `FileSystem` are built.
     */
   def builder(localCores: Int = cores): SparkSession.Builder =
     SparkSession.builder()
-      .config(streamingIo.toMap)
+      .config(streamingConfs.toMap)
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .master(s"local[$localCores]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")

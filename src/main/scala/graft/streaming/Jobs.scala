@@ -11,14 +11,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object JobStatus {
 
   /** One-line status readout, the `print(job_status)` analogue, ending
-    * with the session's checkpoint I/O posture ([[graft.Posture.ioEnv]]).
+    * with the session's streaming posture ([[graft.Posture.streamingEnv]]).
     */
   def statusLine(q: StreamingQuery): String = {
     val s = q.status
     s"job ${Option(q.name).getOrElse(q.id.toString)}: active=${q.isActive} " +
       s"dataAvailable=${s.isDataAvailable} triggerActive=${s.isTriggerActive} " +
       s"""message="${s.message}" """ +
-      graft.Posture.ioEnv(q.sparkSession).map { case (k, v) => s"$k=$v" }.mkString(" ")
+      graft.Posture.streamingEnv(q.sparkSession).map { case (k, v) => s"$k=$v" }.mkString(" ")
   }
 
   /** Last micro-batch progress, if any has completed yet. */

@@ -147,14 +147,15 @@ object TickSink {
     if (availableNow) w.trigger(Trigger.AvailableNow()) else w
   }
 
-  /** Start the query with [[graft.Posture.streamingIo]] set on the
+  /** Start the query with [[graft.Posture.streamingConfs]] set on the
     * DataFrame's session first, so a session Posture did not build
-    * checkpoints fork-free too. The confs stay set: the file source builds
-    * its metadata log from this session on the stream thread at the first
-    * trigger, after `start()` has returned.
+    * checkpoints fork-free and reuses cached generated classes too. The
+    * confs stay set: the file source builds its metadata log, and the
+    * query's cloned session picks its class loader, on the stream thread
+    * at the first trigger, after `start()` has returned.
     */
   def start(df: DataFrame, sink: Sink, availableNow: Boolean = false): StreamingQuery = {
-    graft.Posture.streamingIo.foreach { case (k, v) => df.sparkSession.conf.set(k, v) }
+    graft.Posture.streamingConfs.foreach { case (k, v) => df.sparkSession.conf.set(k, v) }
     writer(df, sink, availableNow).start()
   }
 

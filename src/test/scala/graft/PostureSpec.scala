@@ -39,28 +39,31 @@ class PostureSpec extends GraftSpec {
     assert(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).getRaw
       .isInstanceOf[NioRawLocalFileSystem])
     assert(spark.conf.get(Posture.ChangelogConf) === "true")
-    assert(Posture.ioEnv(spark).toMap === Map(
-      "checkpoint_fs" -> classOf[NioLocalFs].getName, "rocksdb_changelog" -> "true"))
+    assert(spark.conf.get(Posture.ArtifactIsolationConf) === "false")
+    assert(Posture.streamingEnv(spark).toMap === Map(
+      "checkpoint_fs" -> classOf[NioLocalFs].getName, "rocksdb_changelog" -> "true",
+      "artifact_isolation" -> "false"))
   }
 
   test("TickSink.start puts the streaming I/O confs back on a session that lost them") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val keys = Posture.streamingIo.map(_._1)
+    val keys = Posture.streamingConfs.map(_._1)
+    assert(keys.contains(Posture.ArtifactIsolationConf))
     keys.foreach(spark.conf.unset)
     try {
-      assert(Posture.ioEnv(spark).toMap ===
+      assert(Posture.streamingEnv(spark).toMap ===
         Map("checkpoint_fs" -> classOf[org.apache.hadoop.fs.local.LocalFs].getName,
-          "rocksdb_changelog" -> "false"))
+          "rocksdb_changelog" -> "false", "artifact_isolation" -> "true"))
       val input = MemoryStream[Int]
       val q = streaming.TickSink.start(input.toDF(), streaming.TickSink.Noop)
       try {
         input.addData(1, 2)
         q.processAllAvailable()
       } finally q.stop()
-      assert(keys.map(spark.conf.getOption) === Posture.streamingIo.map(kv => Some(kv._2)))
-      assert(Posture.ioEnv(spark).head === ("checkpoint_fs" -> classOf[NioLocalFs].getName))
-    } finally Posture.streamingIo.foreach { case (k, v) => spark.conf.set(k, v) }
+      assert(keys.map(spark.conf.getOption) === Posture.streamingConfs.map(kv => Some(kv._2)))
+      assert(Posture.streamingEnv(spark).head === ("checkpoint_fs" -> classOf[NioLocalFs].getName))
+    } finally Posture.streamingConfs.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("only Posture.scala builds a SparkSession under src/main/scala") {

@@ -1555,7 +1555,7 @@ class StreamingSpec extends GraftSpec {
 
   test("reference candlestick survives a restart and a changelog replay on RocksDB") {
     // through TickSink.start, so RocksDB commits changelog files
-    // (Posture.streamingIo): run 1 stops after three file batches, run 2
+    // (Posture.streamingConfs): run 1 stops after three file batches, run 2
     // restarts as-is, run 3 restarts with the last commit record deleted,
     // so that batch re-runs on state rebuilt from the changelog. No-data
     // batches are off so that the torn last batch is a data batch.
@@ -1615,6 +1615,43 @@ class StreamingSpec extends GraftSpec {
     assert(closed.count() >= 6, "at least minutes 0-2 closed for both tickers")
     assert(got.count() === closed.count(), "no window emitted twice")
     assert(got.exceptAll(closed).isEmpty && closed.exceptAll(got).isEmpty)
+  }
+
+  test("a repeated reference drain compiles nothing: both queries' tasks share one class loader") {
+    // With artifact isolation on, each query's cloned session gets its own
+    // executor class loader, and the codegen cache, keyed on that loader,
+    // misses for every class the second drain generates. Posture turns it
+    // off (Posture.streamingConfs); each drain below starts a fresh query
+    // on a fresh temporary checkpoint.
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val in = Files.createTempDirectory("graft_cg").toString
+    Files.write(Paths.get(s"$in/ticks.json"),
+      (for (m <- 0 until 4; s <- 0 until 60 by 11; t <- Seq("AAPL", "MSFT")) yield
+        f"""{"utc":"2024-01-01 00:$m%02d:$s%02d.000","ticker":"$t",""" +
+          s""""price":${(m * 13 + s + t.length) % 50}.5}""")
+        .mkString("\n").getBytes("UTF-8"))
+    // (rows, task context class loaders) of one drain; sends run in the
+    // query's tasks, and local mode shares the JVM with StreamingSpec.sends
+    def drain(): (Seq[String], Set[ClassLoader]) = {
+      StreamingSpec.sends.clear()
+      val q = TickSink.start(
+        StreamingQueries.candlestick(TickSource.fileJson(spark, in, "SQL")),
+        TickSink.KeyedBatched(100, Nil, ";", (_, rows) => rows.foreach(r =>
+          StreamingSpec.sends.add(Thread.currentThread.getContextClassLoader -> r.toString))),
+        availableNow = true)
+      q.awaitTermination(60000)
+      val sent = StreamingSpec.sends.asScala.toSeq
+      (sent.map(_._2).sorted, sent.map(_._1).toSet)
+    }
+    val (rows1, loaders1) = drain()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (rows2, loaders2) = drain()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0 === 0,
+      "the second drain reuses every generated class")
+    assert(rows1.size === 6, "minutes 0-2 closed for both tickers")
+    assert(rows2 === rows1)
+    assert(loaders1.size === 1 && loaders2 === loaders1)
   }
 
   test("exactly-once sink: replay after a torn commit writes no duplicate rows") {
@@ -2208,4 +2245,11 @@ class StreamingSpec extends GraftSpec {
       assert(jobs.count(_.contains(o)) === 1, s"$o once, in JobRunner.run")
     }
   }
+}
+
+object StreamingSpec {
+  /** Sends recorded by a test's sink callback, with the context class
+    * loader of the task that made them.
+    */
+  val sends = new java.util.concurrent.ConcurrentLinkedQueue[(ClassLoader, String)]()
 }
