@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.Cbo
+
 /** Time-series join operators Spark has no native form for (SURVEY.md
   * §2-B extension surface): as-of join and bounded range join. Both are
   * composed from equi-join/window primitives per the custom-operator
@@ -136,21 +138,6 @@ object Joins {
       .drop("_salt")
   }
 
-  /** Run `body` with session confs set, restoring prior values after.
-    * Callers must force execution INSIDE (Catalyst reads confs at
-    * optimization time, not DataFrame construction).
-    */
-  def withConfs[T](spark: org.apache.spark.sql.SparkSession,
-      pairs: (String, String)*)(body: => T): T = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Deterministic skewed fixture for the AQE-vs-manual comparison: the
     * probe is lineitem with every third order key collapsed onto ONE hot
     * key (~1/3 of all probe rows land in a single join partition), the
@@ -223,11 +210,11 @@ object Joins {
     */
   def bloomRuntimeJoin(spark: org.apache.spark.sql.SparkSession,
       li: DataFrame, orders: DataFrame): DataFrame =
-    withConfs(spark,
+    Cbo.withConfs(spark, Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
         -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       bloomJoinAgg(li, orders).localCheckpoint()
     }
 
@@ -245,14 +232,14 @@ object Joins {
 
   def skewAqeJoin(spark: org.apache.spark.sql.SparkSession,
       li: DataFrame, orders: DataFrame): DataFrame =
-    withConfs(spark,
+    Cbo.withConfs(spark, Seq(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
         -> "262144",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       skewedJoinAgg(li, orders).localCheckpoint()
     }
 }

@@ -439,4 +439,66 @@ object GraftProperties extends Properties("graft") {
         .collect().map(_.getString(0))
       fps(0) == fps(2) && fps(0) != fps(1)
     }
+
+  // ---- TickJsonFormat == format("json") on producer-shaped lines ---------
+  private val tickFieldsGen: Gen[Seq[(String, String)]] = {
+    def quoted(g: Gen[String]) = g.map(v => s""""$v"""")
+    val utc = Gen.frequency(
+      8 -> quoted(Gen.choose(0L, 4102444800000L).map { ms =>
+        val t = java.time.LocalDateTime.ofEpochSecond(ms / 1000, (ms % 1000).toInt * 1000000,
+          java.time.ZoneOffset.UTC)
+        t.format(java.time.format.DateTimeFormatter.ofPattern(graft.streaming.Tick.TsFormatSql))
+      }),
+      1 -> Gen.const("null"),
+      1 -> Gen.const("\"2024-01-01T00:00:00.000\""))
+    val price = Gen.frequency(
+      6 -> Gen.choose(0, 999999).map(c => f"${c / 100}.${c % 100}%02d"),
+      2 -> Gen.choose(-100000, 100000).map(_.toString),
+      1 -> Gen.choose(-9999, 9999).map(m => s"${m}e-3"),
+      1 -> Gen.choose(1, 999).map(m => s"${m / 100.0}E+2"),
+      1 -> Gen.oneOf("-0", "-0.0", "0", "null"))
+    val ticker = Gen.frequency(8 -> quoted(Gen.oneOf(graft.streaming.Tick.tickers)),
+      1 -> Gen.const("null"))
+    val extra = for {
+      k <- Gen.oneOf("type", "source", "name", "sector", "industry", "seq", "ok")
+      v <- Gen.oneOf(quoted(Gen.alphaStr.map(_.take(8))), Gen.choose(-50, 50).map(_.toString),
+        Gen.oneOf("true", "false", "null"))
+    } yield k -> v
+    for {
+      u <- utc; p <- price; t <- ticker
+      keep <- Gen.listOfN(3, Gen.frequency(9 -> true, 1 -> false))
+      extras <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, extra))
+      order <- Gen.choose(0L, Long.MaxValue)
+    } yield {
+      val required = Seq("utc" -> u, "price" -> p, "ticker" -> t).zip(keep).collect {
+        case (kv, true) => kv
+      }
+      new scala.util.Random(order).shuffle(required ++ extras.distinctBy(_._1))
+    }
+  }
+
+  private val tickLinesGen: Gen[Seq[String]] = for {
+    n <- Gen.choose(1, 40)
+    lines <- Gen.listOfN(n, for {
+      fields <- tickFieldsGen
+      sp <- Gen.oneOf("", " ", "\t", "  ")
+    } yield fields.map { case (k, v) => s""""$k"$sp:$sp$v""" }
+      .mkString(s"{$sp", s"$sp,$sp", s"$sp}"))
+  } yield lines
+
+  property("TickJsonFormat == format(json) on producer-shaped lines") =
+    forAll(tickLinesGen) { lines =>
+      val dir = java.nio.file.Files.createTempDirectory("tick_prop")
+      java.nio.file.Files.write(dir.resolve("t.json"), lines.mkString("\n").getBytes("UTF-8"))
+      def cells(format: String) = {
+        val r = spark.read.schema(graft.streaming.Tick.schema)
+          .option("timestampFormat", graft.streaming.Tick.TsFormatSql)
+        val df = if (format == "json") r.json(dir.toString) else r.format(format).load(dir.toString)
+        df.collect().map(_.toSeq.map {
+          case t: java.sql.Timestamp => t.toInstant.toString
+          case v => String.valueOf(v)
+        }.mkString("|")).sorted.toSeq
+      }
+      cells(classOf[graft.streaming.TickJsonFormat].getName) == cells("json")
+    }
 }

@@ -895,7 +895,7 @@ class PlanSpec extends GraftSpec {
     // thresholds scaled to the sf0.001 suite volumes (the registered
     // q36 query carries the sf0.1-scale 256 KB threshold; the DECISION
     // logic under test is scale-free)
-    val (aqePlan, aqeRows) = Joins.withConfs(spark,
+    val (aqePlan, aqeRows) = graft.plans.Cbo.withConfs(spark, Seq(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
@@ -903,7 +903,7 @@ class PlanSpec extends GraftSpec {
         -> "4096",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2048",
       "spark.sql.shuffle.partitions" -> "32",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val df = Joins.skewedJoinAgg(li, o)
       val rows = df.collect().map(_.toString).sorted.toSeq
       (df.queryExecution.executedPlan.toString, rows)
@@ -934,7 +934,7 @@ class PlanSpec extends GraftSpec {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
         -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val (onPlan, onRows) = Joins.withConfs(spark, confs: _*) {
+    val (onPlan, onRows) = graft.plans.Cbo.withConfs(spark, confs) {
       val df = Joins.bloomJoinAgg(li, o)
       (df.queryExecution.optimizedPlan.toString,
         df.collect().map(_.toString).sorted.toSeq)
@@ -943,13 +943,13 @@ class PlanSpec extends GraftSpec {
       s"no bloom built on the creation side:\n$onPlan")
     assert(onPlan.contains("might_contain"),
       s"no might_contain pushed into the fact side:\n$onPlan")
-    val offPlan = Joins.withConfs(spark,
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+    val offPlan = graft.plans.Cbo.withConfs(spark,
+      Seq("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")) {
       Joins.bloomJoinAgg(li, o).queryExecution.optimizedPlan.toString
     }
     assert(!offPlan.contains("might_contain"), offPlan)
-    val offRows = Joins.withConfs(spark,
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+    val offRows = graft.plans.Cbo.withConfs(spark,
+      Seq("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")) {
       Joins.bloomJoinAgg(li, o).collect().map(_.toString).sorted.toSeq
     }
     assert(onRows === offRows)
@@ -1055,9 +1055,9 @@ class PlanSpec extends GraftSpec {
     assert(onSize < offSize,
       s"column stats must shrink the filtered estimate: $onSize vs $offSize")
     val threshold = ((onSize + offSize) / 2).toString
-    def strategy(cbo: Boolean): String = Joins.withConfs(spark,
-      (Seq("spark.sql.autoBroadcastJoinThreshold" -> threshold) ++
-        (if (cbo) Seq("spark.sql.cbo.enabled" -> "true") else Seq.empty)): _*) {
+    def strategy(cbo: Boolean): String = graft.plans.Cbo.withConfs(spark,
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> threshold) ++
+        (if (cbo) Seq("spark.sql.cbo.enabled" -> "true") else Seq.empty)) {
       spark.sql(joinSql).queryExecution.executedPlan.toString
     }
     val off = strategy(cbo = false)
