@@ -8,8 +8,7 @@ import org.apache.hadoop.io.Text
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JSONOptionsInRead, JacksonParser}
 import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
@@ -34,27 +33,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * and `null`, and `utc` in the exact 23-character form of the configured
   * `timestampFormat` with calendar and range checks. It converts `utc` in
   * the options' zone through `ZonedDateTime.of`, the call Spark's formatter
-  * makes, and through plain arithmetic for a fixed-offset zone. Every other
-  * line (escapes, non-ASCII, single quotes, nested values, duplicate or
-  * case-variant required keys, a required key holding another token type,
-  * other fraction widths, invalid dates, trailing bytes, blank lines, root
-  * arrays) goes to a per-file `FailureSafeParser` over Spark's
+  * makes. Every other line (escapes, non-ASCII, single quotes, nested
+  * values, duplicate or case-variant required keys, a required key holding
+  * another token type, other fraction widths, invalid dates, trailing
+  * bytes, blank lines, root arrays) goes to a per-file `FailureSafeParser` over Spark's
   * `JacksonParser`, built with the same parsed options and mode: the code
   * `format("json")` runs. Rows, nulls and PERMISSIVE / DROPMALFORMED /
-  * FAILFAST behaviour are therefore Spark's. The decoder writes unsafe rows
-  * directly, so a task also skips the projection Spark's wrapper generates
-  * per file. A scan goes to Spark's reader whole unless every required
-  * column is one of [[Tick.schema]]'s, no filter is pushed, there are no
-  * partition columns,
-  * `multiLine`, `encoding`, `lineSep` and the Jackson length/depth limits
-  * are unset, the time parser policy is not `LEGACY`, and a required `utc`
-  * is read with [[Tick.TsFormatSql]] or [[Tick.TsFormatIso]].
+  * FAILFAST behaviour are therefore Spark's. A scan goes to Spark's reader
+  * whole unless every required column is one of [[Tick.schema]]'s, no
+  * filter is pushed, there are no partition columns, `multiLine`,
+  * `encoding`, `lineSep` and the Jackson length/depth limits are unset, the
+  * time parser policy is not `LEGACY`, and a required `utc` is read with
+  * [[Tick.TsFormatSql]] or [[Tick.TsFormatIso]].
   *
   * Measured cost (perfbench ticks_drain, shared 4-CPU host, traced pair):
-  * scan-stage CPU per drain round fell from 1023 to 369 ms, and task CPU
-  * from 1365 to 688 ms. Throughput rose from 138.8k to 164.9k ticks/s in
-  * the median of 10 alternating pairs (10/10 won). Every run is in
-  * `PERF_tick_decoder.json`.
+  * scan-stage CPU per drain round fell from 944 to 490 ms, and task CPU
+  * from 1233 to 812 ms. Throughput rose from 136.4k to 160.9k ticks/s in
+  * the median of 10 alternating pairs (10/10 won). A variant that wrote
+  * unsafe rows itself and converted numbers and dates by arithmetic won
+  * only 3 of 10 pairs against this form, so it was not kept. Every run is
+  * in `PERF_tick_decoder.json`.
   *
   * Equality: `JsonFileFormat` is a case class, so without the overrides
   * below a `TickJsonFormat` would compare equal to it, and a relation over
@@ -67,11 +65,8 @@ class TickJsonFormat extends JsonFileFormat {
   override def equals(other: Any): Boolean = other.isInstanceOf[TickJsonFormat]
   override def hashCode(): Int = classOf[TickJsonFormat].getName.hashCode
 
-  /** Spark's reader (`buildReader`, then a per-task projection to unsafe
-    * rows) unless the decoder may serve this scan; the decoder writes
-    * unsafe rows itself, so a task generates no projection for them.
-    */
-  override def buildReaderWithPartitionValues(
+  /** Spark's reader unless the decoder may serve this scan. */
+  override def buildReader(
       sparkSession: SparkSession,
       dataSchema: StructType,
       partitionSchema: StructType,
@@ -86,7 +81,7 @@ class TickJsonFormat extends JsonFileFormat {
       .equalsIgnoreCase("LEGACY")
     TickJsonFormat.timestampSeparator(requiredSchema, partitionSchema, filters, parsed, legacy) match {
       case None =>
-        super.buildReaderWithPartitionValues(sparkSession, dataSchema, partitionSchema,
+        super.buildReader(sparkSession, dataSchema, partitionSchema,
           requiredSchema, filters, options, hadoopConf)
       case Some(sep) =>
         val conf = Bridge.broadcastHadoopConf(sparkSession.sparkContext, hadoopConf)
@@ -132,17 +127,14 @@ object TickJsonFormat {
     }
   }
 
-  /** Spark's per-line JSON reader, as `format("json")` builds it, with
-    * its rows projected to unsafe rows as Spark's own wrapper does.
-    */
+  /** Spark's per-line JSON reader, as `format("json")` builds it. */
   private def sparkReader(schema: StructType, opts: JSONOptions): Text => Iterator[InternalRow] = {
     val parser = new JacksonParser(schema, opts, allowArrayAsStructs = true)
     val safe = new FailureSafeParser[Text](
       line => parser.parse(line, CreateJacksonParser.text(_: JsonFactory, _: Text),
         (t: Text) => UTF8String.fromBytes(t.getBytes, 0, t.getLength)),
       opts.parseMode, schema, opts.columnNameOfCorruptRecord)
-    val toUnsafe = UnsafeProjection.create(schema)
-    line => safe.parse(line).map(toUnsafe)
+    safe.parse
   }
 }
 
@@ -158,12 +150,7 @@ private[streaming] final class TickLineDecoder(schema: StructType, tsSep: Byte, 
     case DoubleType => TickLineDecoder.Dbl
     case TimestampType => TickLineDecoder.Ts
   })
-  private val fixedOffsetSeconds: Option[Int] =
-    Option(zone.getRules).filter(_.isFixedOffset)
-      .map(_.getOffset(java.time.Instant.EPOCH).getTotalSeconds)
-
-  private val writer = new UnsafeRowWriter(schema.length)
-  def row: UnsafeRow = writer.getRow
+  val row = new SpecificInternalRow(schema.fields.map(_.dataType).toIndexedSeq)
 
   private var b: Array[Byte] = Array.emptyByteArray
   private var end = 0
@@ -171,13 +158,13 @@ private[streaming] final class TickLineDecoder(schema: StructType, tsSep: Byte, 
   // bounds of the last scanned string or number
   private var s0 = 0
   private var s1 = 0
+  // whether the last scanned number has a fraction or an exponent
+  private var floatToken = false
   // bit f set once field f holds a value
   private var valued = 0
 
   def decode(bytes: Array[Byte], len: Int): Boolean = {
     b = bytes; end = len; pos = 0; valued = 0
-    writer.reset()
-    writer.zeroOutNullBytes()
     ws()
     if (!take('{')) return false
     ws()
@@ -205,7 +192,7 @@ private[streaming] final class TickLineDecoder(schema: StructType, tsSep: Byte, 
     ws()
     if (pos != end) return false
     var f = 0
-    while (f < names.length) { if ((valued & (1 << f)) == 0) writer.setNullAt(f); f += 1 }
+    while (f < names.length) { if ((valued & (1 << f)) == 0) row.setNullAt(f); f += 1 }
     true
   }
 
@@ -275,7 +262,8 @@ private[streaming] final class TickLineDecoder(schema: StructType, tsSep: Byte, 
       case '"' =>
         string() && (kind match {
           case TickLineDecoder.Skip => true
-          case TickLineDecoder.Str => writer.write(f, b, s0, s1 - s0); valued |= 1 << f; true
+          case TickLineDecoder.Str =>
+            row.update(f, UTF8String.fromBytes(b, s0, s1 - s0)); valued |= 1 << f; true
           case TickLineDecoder.Ts => timestamp(f)
           case _ => false
         })
@@ -305,16 +293,19 @@ private[streaming] final class TickLineDecoder(schema: StructType, tsSep: Byte, 
     */
   private def number(): Boolean = {
     s0 = pos
+    floatToken = false
     take('-')
     if (take('0')) ()
     else if (isDigit(pos)) while (isDigit(pos)) pos += 1
     else return false
     if (take('.')) {
+      floatToken = true
       if (!isDigit(pos)) return false
       while (isDigit(pos)) pos += 1
     }
     if (pos < end && (b(pos) == 'e' || b(pos) == 'E')) {
       pos += 1
+      floatToken = true
       if (!take('+')) take('-')
       if (!isDigit(pos)) return false
       while (isDigit(pos)) pos += 1
@@ -324,51 +315,16 @@ private[streaming] final class TickLineDecoder(schema: StructType, tsSep: Byte, 
   }
 
   /** Jackson's value for the number at `[s0, s1)`: an integer token goes
-    * through `long` (so `-0` is 0.0), a float token is rounded once to the
-    * nearest double (`Double.parseDouble`'s result).
+    * through `long` (so `-0` is 0.0), a float token through `parseDouble`.
     */
   private def toDouble(f: Int): Boolean = {
-    val neg = b(s0) == '-'
-    var i = if (neg) s0 + 1 else s0
-    var mantissa = 0L
-    var digits = 0
-    var fraction = 0
-    var isFloat = false
-    while (i < s1 && b(i) != 'e' && b(i) != 'E') {
-      if (b(i) == '.') isFloat = true
-      else {
-        if (digits < 18) mantissa = mantissa * 10 + (b(i) - '0')
-        digits += 1
-        if (isFloat) fraction += 1
-      }
-      i += 1
-    }
-    var exp = 0
-    if (i < s1) {
-      isFloat = true
-      i += 1
-      val expNeg = b(i) == '-'
-      if (b(i) == '-' || b(i) == '+') i += 1
-      while (i < s1 && exp < 1000) { exp = exp * 10 + (b(i) - '0'); i += 1 }
-      if (expNeg) exp = -exp
-    }
-    if (!isFloat) {
-      if (digits > 18) return false
-      writer.write(f, (if (neg) -mantissa else mantissa).toDouble)
-      valued |= 1 << f
-      return true
-    }
-    val e10 = exp - fraction
-    val abs =
-      if (digits <= 15 && e10 >= -22 && e10 <= 22) {
-        if (e10 >= 0) mantissa * TickLineDecoder.Pow10(e10)
-        else mantissa / TickLineDecoder.Pow10(-e10)
-      } else {
-        val from = if (neg) s0 + 1 else s0
-        java.lang.Double.parseDouble(new String(b, from, s1 - from, "US-ASCII"))
-      }
-    if (abs.isInfinite) return false
-    writer.write(f, if (neg) -abs else abs)
+    val text = new String(b, s0, s1 - s0, "US-ASCII")
+    val v =
+      if (floatToken) java.lang.Double.parseDouble(text)
+      else if (s1 - s0 <= 18) text.toLong.toDouble
+      else return false
+    if (v.isInfinite) return false
+    row.setDouble(f, v)
     valued |= 1 << f
     true
   }
@@ -392,15 +348,9 @@ private[streaming] final class TickLineDecoder(schema: StructType, tsSep: Byte, 
       minute < 0 || minute > 59 || second < 0 || second > 59 || milli < 0) return false
     val leap = year % 4 == 0 && (year % 100 != 0 || year % 400 == 0)
     if (day > TickLineDecoder.monthLength(month, leap)) return false
-    val epochSecond = fixedOffsetSeconds match {
-      case Some(offset) =>
-        TickLineDecoder.epochDay(year, month, day) * 86400L +
-          hour * 3600 + minute * 60 + second - offset
-      case None =>
-        ZonedDateTime.of(year, month, day, hour, minute, second, milli * 1000000, zone)
-          .toEpochSecond
-    }
-    writer.write(f, epochSecond * 1000000L + milli * 1000L)
+    val epochSecond =
+      ZonedDateTime.of(year, month, day, hour, minute, second, milli * 1000000, zone).toEpochSecond
+    row.setLong(f, epochSecond * 1000000L + milli * 1000L)
     valued |= 1 << f
     true
   }
@@ -426,21 +376,6 @@ private[streaming] object TickLineDecoder {
   private final val Ts = 3
   private final val CaseVariant = -2
   private final val MaxNumberBytes = 64
-  // exact: every power of ten up to 1e22 is a double
-  private val Pow10: Array[Double] = Array.iterate(1.0, 23)(_ * 10)
-
-  /** Days from 1970-01-01 to a valid date from year 1 on, in the
-    * proleptic Gregorian calendar (H. Hinnant's `days_from_civil`).
-    */
-  private def epochDay(year: Int, month: Int, day: Int): Long = {
-    val y = if (month <= 2) year - 1 else year
-    val era = y / 400
-    val yearOfEra = y - era * 400
-    val dayOfYear = (153 * (if (month > 2) month - 3 else month + 9) + 2) / 5 + day - 1
-    val dayOfEra = yearOfEra * 365 + yearOfEra / 4 - yearOfEra / 100 + dayOfYear
-    era * 146097L + dayOfEra - 719468
-  }
-
   private def monthLength(month: Int, leap: Boolean): Int = month match {
     case 2 => if (leap) 29 else 28
     case 4 | 6 | 9 | 11 => 30

@@ -30,7 +30,7 @@ object TickSource {
     * line in one pass and hands every other line to Spark's own JSON
     * parser, so rows and parse modes are Spark's. The per-row decode is on
     * every trigger's critical path; the decoder cut a drain's scan-stage
-    * CPU by about two thirds (figures in [[TickJsonFormat]]). The options
+    * CPU by about half (figures in [[TickJsonFormat]]). The options
     * and the plan are the ones `json` gets, and a checkpoint started on the
     * `json` reader restarts under this one: the file-source log records
     * paths, not the format.
