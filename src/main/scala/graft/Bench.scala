@@ -328,7 +328,8 @@ object Bench {
     * stateful operators show up round-over-round. Volumes are sized so
     * STEADY-STATE trigger time dominates micro-batch startup (the r6
     * artifact's 199 rows/s for curation was ~all startup on a 5k-doc
-    * corpus): 10^6 synthetic ticks for the two tick pipelines, and the
+    * corpus): 10^6 synthetic ticks for the tick pipelines (the reference
+    * candlestick and sliding MIN, and the two-level MIN form), and the
     * docs corpus replicated `SPARK_GRAFT_BENCH_DOC_REPS`x (re-keyed ids;
     * content replicas are exactly what the dedup stage evicts, so state
     * stays |distinct fps|) for curation. The SimHash near-dup stream runs
@@ -452,7 +453,9 @@ object Bench {
     val lines =
       one("candlestick", run(StreamingQueries.candlestick(
         TickSource.fileJson(spark, s"$tmp/ticks")))) ++
-      one("sliding_min", run(StreamingQueries.slidingMinTwoLevel(
+      one("sliding_min", run(StreamingQueries.slidingMin(
+        TickSource.fileJson(spark, s"$tmp/ticks")))) ++
+      one("sliding_min_two_level", run(StreamingQueries.slidingMinTwoLevel(
         TickSource.fileJson(spark, s"$tmp/ticks")))) ++
       one("doc_curation", run(DocPipeline.curate(
         DocPipeline.fileJson(spark, s"$tmp/docs")))) ++

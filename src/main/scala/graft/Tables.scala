@@ -55,11 +55,12 @@ object Tables {
       d.withColumn(f.name, col(f.name).cast(TimestampType)))
   }
 
-  /** events.ts is parquet TIMESTAMP(NANOS), which Spark only reads as a raw
-    * Long (`spark.sql.legacy.parquet.nanosAsLong`); convert to a proper
-    * TimestampType by truncating to micros — exactly what DuckDB does when
-    * it reads the same file, so oracle parity holds. The conf is set lazily
-    * here so the code also works under a driver-owned SparkSession.
+  /** An events.ts stored as parquet TIMESTAMP(NANOS) (the benchmark
+    * generator's files; the test data store micros) is one Spark only reads
+    * as a raw Long (`spark.sql.legacy.parquet.nanosAsLong`); convert it to a
+    * proper TimestampType by truncating to micros — exactly what DuckDB does
+    * when it reads the same file, so oracle parity holds. The conf is set
+    * lazily here so the code also works under a driver-owned SparkSession.
     */
   private def withMicrosTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
@@ -67,9 +68,41 @@ object Tables {
       case _ => df
     }
 
+  /** events is read with its schema given: the one the footer of
+    * `events.parquet` declares, under the session's parquet confs. That
+    * is what Spark's inference computes for the file, without the
+    * inference job. The footer decides the type, not a constant, because
+    * the data sets differ: the test data store `ts` in micros (read as
+    * TIMESTAMP_NTZ), the benchmark's generator in nanos (read as a Long).
+    */
   private def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ltz(spark, withMicrosTs(spark.read.parquet(s"$sfDir/events.parquet")))
+    val path = s"$sfDir/events.parquet"
+    ltz(spark, withMicrosTs(spark.read
+      .schema(footerSchema(spark, path, readFooter(spark, path))).parquet(path)))
+  }
+
+  /** The footer of one parquet file, read on the driver. */
+  private[graft] def readFooter(spark: SparkSession, path: String)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf()))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The Spark schema of one parquet file from its footer: Spark's own
+    * footer reading (the schema a Spark writer recorded, else the
+    * converted parquet schema) under the session's confs — what schema
+    * inference computes for that file, without running a job.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(new org.apache.hadoop.fs.Path(path), footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Register every table as a temp view (SURVEY.md S11) for spark.sql use. */

@@ -62,6 +62,17 @@ object Cdc {
     */
   val storeCols: Seq[String] = storeSchema.fieldNames.toSeq
 
+  /** The columns of one store DATA file: [[storeSchema]] minus `lang`,
+    * which lives in the directory name (or, for an RTBF replacement file,
+    * only in the manifest). Every store read hands it to the parquet
+    * reader, so no read runs Spark's schema-inference job, and every
+    * commit checks the footers of the files it wrote against it
+    * ([[fileZoneMap]]): a known-schema read would turn a missing column
+    * into silent NULLs, so a file that does not match fails the commit.
+    */
+  private[graft] val dataFileSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(storeSchema.filterNot(_.name == "lang"))
+
   private val insIdOffset = 1000000L
 
   /** One day's synthetic delta arithmetic: which keys delete
@@ -407,100 +418,158 @@ object Cdc {
   private val manifestStatCols: Seq[String] =
     Seq("min_doc_id", "max_doc_id", "min_n_chars", "max_n_chars", "n_rows")
 
-  /** Build the manifest rows for just-written partition directories:
-    * list the files, then ONE column-pruned read of exactly those files
-    * computes each file's zone map (min/max doc_id, min/max n_chars,
-    * row count), keyed back by the `lang=<l>/<fname>` tail (unique — a
-    * write job never emits two files with the same part index within a
-    * directory). The stats frame is |written files| rows — the same
-    * dirty-bounded metadata list the commit already holds.
+  /** The manifest table's schema as a read yields it: lang (the partition
+    * column), the file's path, its zone map ([[manifestStatCols]]). Every
+    * manifest read passes it, so none runs a schema-inference job.
     */
-  private def manifestEntries(
-      spark: SparkSession, dataDir: String, langs: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val files: Seq[(String, String)] =
-      langs.sorted.flatMap(l => partFiles(spark, s"$dataDir/lang=$l").map((l, _)))
-    // a feed can legitimately wipe a partition (the WAP bad-feed abort
-    // path stages exactly that) — zero files means zero manifest rows,
-    // never a zero-path read
-    if (files.isEmpty)
-      return Seq.empty[(String, String, Long, Long, Long, Long, Long)]
-        .toDF("lang" +: "path" +: manifestStatCols: _*)
-    // Zone maps come from the parquet FOOTERS of the just-written files,
-    // not a second data-sized read: the writer already serialized exact
-    // per-row-group min/max/rowCount for the INT64 stat columns, so the
-    // commit's stats pass is |files| footer reads (KB each) instead of
-    // re-decoding every written byte through a shuffle-agg job (guide
-    // §6 — this is what a table format's committer does; the r18
-    // baseline priced the re-read form at ~0.3-0.5 s per commit across
-    // ~40 commits of setup chains). Footer reads are driver-side and
-    // parallelized over a small pool; at production file counts the
-    // stats would instead be captured from the write tasks themselves —
-    // this form already never touches data bytes. INT64 footer stats
-    // are exact (no truncation, unlike binary stats); a file missing
-    // stats for either column (foreign writer, all-null chunk) fails
-    // loudly rather than inventing a zone map — the store's writers
-    // always produce them (doc_id/n_chars are non-null by the store
-    // contract).
-    val conf = spark.sessionState.newHadoopConf()
-    def footerStats(p: String): (Long, Long, Long, Long, Long) = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(p), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val blocks = reader.getFooter.getBlocks
-        require(!blocks.isEmpty, s"manifest stats: $p has zero row groups")
-        var (mn, mx, mnc, mxc, n) =
-          (Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue, 0L)
-        blocks.forEach { b =>
-          n += b.getRowCount
-          b.getColumns.forEach { c =>
-            val name = c.getPath.toDotString
-            if (name == "doc_id" || name == "n_chars") {
-              val st = c.getStatistics
-              require(st != null && st.hasNonNullValue && st.getNumNulls == 0,
-                s"manifest stats: $p column $name lacks exact footer " +
-                  "min/max — the store writer always produces them")
-              val lo = st.genericGetMin.asInstanceOf[Number].longValue
-              val hi = st.genericGetMax.asInstanceOf[Number].longValue
-              if (name == "doc_id") {
-                mn = math.min(mn, lo); mx = math.max(mx, hi)
-              } else {
-                mnc = math.min(mnc, lo); mxc = math.max(mxc, hi)
-              }
-            }
-          }
-        }
-        (mn, mx, mnc, mxc, n)
-      } finally reader.close()
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, files.size))
-    val rows =
-      try files.map { case (l, p) =>
-        pool.submit(new java.util.concurrent.Callable[
-          (String, String, Long, Long, Long, Long, Long)] {
-          def call() = {
-            val (mn, mx, mnc, mxc, n) = footerStats(p)
-            (l, p, mn, mx, mnc, mxc, n)
-          }
-        })
-      }.map(f => try f.get() catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      })
-      finally pool.shutdown()
-    rows.toDF("lang" +: "path" +: manifestStatCols: _*)
+  private[graft] val manifestSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    StructType(StructField("lang", StringType) +: StructField("path", StringType) +:
+      manifestStatCols.map(StructField(_, LongType)))
   }
 
-  /** Persist a manifest frame partitionBy(lang): each partition's file
-    * entries land in their own `lang=<l>` manifest directory, so an
-    * as-of read filtered to a lang subset LISTS (and collects) only
-    * those partitions' metadata — at 10⁶–10⁷ files/version the flat
-    * manifest collect is the lakehouse metadata wall this avoids.
+  /** One data file's zone map, in [[manifestStatCols]] order. */
+  private[graft] final case class ZoneMap(minDocId: Long, maxDocId: Long,
+      minNChars: Long, maxNChars: Long, nRows: Long) {
+    def values: Seq[Long] = Seq(minDocId, maxDocId, minNChars, maxNChars, nRows)
+  }
+
+  /** One manifest row: a committed data file, its partition, its zone map. */
+  private[graft] final case class ManifestEntry(lang: String, path: String, zone: ZoneMap)
+
+  /** A committed file's zone map from its parquet FOOTER, read on the
+    * driver: the writer already serialized exact per-row-group min/max
+    * and row counts for the INT64 stat columns, so a commit's stats cost
+    * is one footer read (KB) per written file, never a re-read of its
+    * data. The footer's schema must be [[dataFileSchema]] (names and
+    * types), or the commit fails naming the file — every store read
+    * trusts that schema. A file missing stats for either column (a
+    * foreign writer, an all-null chunk) fails the same way rather than
+    * inventing a zone map; the store's writers always produce them
+    * (doc_id/n_chars are non-null by the store contract). At production
+    * file counts the stats would be captured from the write tasks
+    * themselves.
     */
-  private def writeManifest(m: DataFrame, manifestPath: String): Unit =
-    m.select("lang" +: "path" +: manifestStatCols map col: _*)
-      .write.mode("overwrite").partitionBy("lang").parquet(manifestPath)
+  private[graft] def fileZoneMap(spark: SparkSession, p: String): ZoneMap = {
+    val footer = graft.Tables.readFooter(spark, p)
+    val schema = graft.Tables.footerSchema(spark, p, footer)
+    def types(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => f.name -> f.dataType).toMap
+    require(types(schema) == types(dataFileSchema),
+      s"store commit: $p has schema ${schema.simpleString}, not the store's " +
+        s"${dataFileSchema.simpleString}")
+    val blocks = footer.getBlocks
+    require(!blocks.isEmpty, s"manifest stats: $p has zero row groups")
+    var (mn, mx, mnc, mxc, n) =
+      (Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue, 0L)
+    blocks.forEach { b =>
+      n += b.getRowCount
+      b.getColumns.forEach { c =>
+        val name = c.getPath.toDotString
+        if (name == "doc_id" || name == "n_chars") {
+          val st = c.getStatistics
+          require(st != null && st.hasNonNullValue && st.getNumNulls == 0,
+            s"manifest stats: $p column $name lacks exact footer " +
+              "min/max — the store writer always produces them")
+          val lo = st.genericGetMin.asInstanceOf[Number].longValue
+          val hi = st.genericGetMax.asInstanceOf[Number].longValue
+          if (name == "doc_id") {
+            mn = math.min(mn, lo); mx = math.max(mx, hi)
+          } else {
+            mnc = math.min(mnc, lo); mxc = math.max(mxc, hi)
+          }
+        }
+      }
+    }
+    ZoneMap(mn, mx, mnc, mxc, n)
+  }
+
+  /** The manifest rows for just-written partition directories: list the
+    * files, then one footer read per file ([[fileZoneMap]]) — |written
+    * files| rows, the same dirty-bounded metadata list the commit
+    * already holds. A feed can legitimately wipe a partition (the WAP
+    * bad-feed abort path stages exactly that): zero files means zero
+    * rows.
+    */
+  private[graft] def manifestEntries(
+      spark: SparkSession, dataDir: String, langs: Seq[String]): Seq[ManifestEntry] =
+    langs.sorted.flatMap(l => partFiles(spark, s"$dataDir/lang=$l")
+      .map(p => ManifestEntry(l, p, fileZoneMap(spark, p))))
+
+  /** Collect the rows of several manifests in ONE job (a union of
+    * known-schema reads), returned per manifest in argument order, each
+    * sorted by (lang, path). A commit holds its parent manifest on the
+    * driver: metadata-sized, |files| rows, which the driver-side
+    * [[writeManifest]] needs anyway.
+    */
+  private[graft] def manifestRows(
+      spark: SparkSession, manifestPaths: Seq[String]): Seq[Seq[ManifestEntry]] = {
+    val rows = manifestPaths.zipWithIndex
+      .map { case (p, i) => manifestFrame(spark, p).withColumn("__m", lit(i)) }
+      .reduce(_ unionByName _)
+      .collect()
+      .groupBy(_.getAs[Int]("__m"))
+    manifestPaths.indices.map { i =>
+      rows.getOrElse(i, Array.empty[org.apache.spark.sql.Row]).toSeq.map { r =>
+        val z = manifestStatCols.map(c => r.getAs[Long](c))
+        ManifestEntry(r.getAs[String]("lang"), r.getAs[String]("path"),
+          ZoneMap(z(0), z(1), z(2), z(3), z(4)))
+      }.sortBy(e => (e.lang, e.path))
+    }
+  }
+
+  /** The parquet message type of one manifest file (lang lives in the
+    * directory name), with the nullability a Spark write of the same
+    * columns records.
+    */
+  private lazy val manifestMessage: org.apache.parquet.schema.MessageType = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+    manifestStatCols.foldLeft(Types.buildMessage()
+        .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("path")) {
+      (b, c) => b.optional(INT64).named(c)
+    }.named("spark_schema")
+  }
+
+  /** Persist a manifest from the driver: its rows are metadata-sized
+    * (|files|), so they are written as one `lang=<l>/part-*.parquet` file
+    * per partition through parquet-hadoop — no Spark job — into a
+    * staging directory beside `manifestPath`, which then replaces it by
+    * one rename (the old directory is deleted first, as an overwrite
+    * write does). The layout is the one a `partitionBy(lang)` write
+    * leaves, so an as-of read filtered to a lang subset LISTS (and
+    * collects) only those partitions' metadata. Zero rows leave an empty
+    * directory, which reads back as an empty manifest.
+    */
+  private[graft] def writeManifest(
+      spark: SparkSession, rows: Seq[ManifestEntry], manifestPath: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val dest = new org.apache.hadoop.fs.Path(manifestPath)
+    val fs = dest.getFileSystem(conf)
+    val id = java.util.UUID.randomUUID().toString
+    val staging = new org.apache.hadoop.fs.Path(dest.getParent,
+      s"_staging_${dest.getName}_$id")
+    require(fs.mkdirs(staging), s"manifest staging mkdir failed: $staging")
+    rows.groupBy(_.lang).foreach { case (l, es) =>
+      val file = new org.apache.hadoop.fs.Path(staging,
+        s"lang=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .escapePathName(l)}/part-00000-$id.c000.snappy.parquet")
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
+        .withConf(conf).withType(manifestMessage)
+        .withCompressionCodec(
+          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+        .build()
+      try es.sortBy(_.path).foreach { e =>
+        val g = new org.apache.parquet.example.data.simple.SimpleGroup(manifestMessage)
+        g.add("path", e.path)
+        manifestStatCols.zip(e.zone.values).foreach { case (c, v) => g.add(c, v) }
+        w.write(g)
+      } finally w.close()
+    }
+    fs.delete(dest, true)
+    require(fs.rename(staging, dest), s"manifest rename failed: $manifestPath")
+  }
 
   /** The number of rows per data file in a ZONED store commit
     * ([[zonedStore]]): rows sort by (lang, doc_id) and roll to a new
@@ -801,11 +870,12 @@ object Cdc {
     * lang subset — the partition predicate reaches the manifest's own
     * parquet scan as a PartitionFilter (CdcSpec pins the listing), so
     * the collect below it is bounded by the pruned partitions' rows.
+    * Read with [[manifestSchema]], so no inference job runs.
     */
   def manifestFrame(
       spark: SparkSession, manifestPath: String,
       langs: Seq[String] = Nil): DataFrame = {
-    val m = spark.read.parquet(manifestPath)
+    val m = spark.read.schema(manifestSchema).parquet(manifestPath)
     if (langs.isEmpty) m else m.where(col("lang").isin(langs: _*))
   }
 
@@ -839,8 +909,16 @@ object Cdc {
     }
     val m = manifestFrame(spark, manifestPath, langs)
     val pruned = if (bands.isEmpty) m else m.where(admits(bands))
-    val manifest = pruned.select("lang", "path")
-      .collect().map(r => r.getString(0) -> r.getString(1))
+    scanFiles(spark, pruned.select("lang", "path")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq)
+  }
+
+  /** The store rows of the given (lang, path) manifest entries, read
+    * with [[dataFileSchema]]: the as-of read behind [[readManifest]], and
+    * a commit's read of the parent files it already holds.
+    */
+  private def scanFiles(
+      spark: SparkSession, manifest: Seq[(String, String)]): DataFrame = {
     if (manifest.isEmpty)
       // zone maps legitimately admit ZERO files when no file's range
       // overlaps the band — an empty frame with the store schema, not a
@@ -865,8 +943,8 @@ object Cdc {
     import spark.implicits._
     val pathLang = manifest
       .map { case (l, p) => (scanKey(p), l) }
-      .toSeq.toDF("__p", "__mlang")
-    spark.read.parquet(manifest.map(_._2).sorted: _*)
+      .toDF("__p", "__mlang")
+    spark.read.schema(dataFileSchema).parquet(manifest.map(_._2).sorted: _*)
       .withColumn("__p",
         regexp_replace(input_file_name(), scanPathNormRe, ""))
       .join(broadcast(pathLang), Seq("__p"), "left")
@@ -938,10 +1016,12 @@ object Cdc {
       spark: SparkSession, fromManifest: String, dataDir: String,
       toManifest: String, rules: DeltaRules,
       dirty: Seq[String] = dirtyLangs, zoneRows: Int = 0): Unit = {
-    // the dirty-lang predicate prunes the MANIFEST partitions before the
-    // driver collects any file list — a commit's metadata cost is
-    // |dirty partitions' files|, never the full manifest
-    val cur = readManifest(spark, fromManifest, dirty)
+    // ONE collect of the parent manifest (|files| rows, metadata): its
+    // dirty rows name the files the merge reads, its clean rows carry
+    // over to the new manifest verbatim
+    val (dirtyRows, clean) = manifestRows(spark, Seq(fromManifest)).head
+      .partition(e => dirty.contains(e.lang))
+    val cur = scanFiles(spark, dirtyRows.map(e => (e.lang, e.path)))
       .select("doc_id", "text", "lang", "source", "n_chars")
     val batch = cur.localCheckpoint()
     val changed = deletesBy(batch, rules)
@@ -952,10 +1032,7 @@ object Cdc {
         .unionByName(updatesBy(batch, rules).select(cols: _*))
         .unionByName(insertsBy(batch, rules).select(cols: _*)),
       dataDir, zoneRows)
-    val parent = manifestFrame(spark, fromManifest)
-    writeManifest(
-      parent.where(!col("lang").isin(dirty: _*))
-        .unionByName(manifestEntries(spark, dataDir, dirty)),
+    writeManifest(spark, clean ++ manifestEntries(spark, dataDir, dirty),
       toManifest)
   }
 
@@ -1022,7 +1099,7 @@ object Cdc {
       .filter(_.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString).toSeq.toDF("path")
     val live = keep
-      .map(v => spark.read.parquet(s"$root/m/v=$v").select(col("path")))
+      .map(v => manifestFrame(spark, s"$root/m/v=$v").select(col("path")))
       .reduce(_ unionByName _)
     val orphans = candidates.join(live, Seq("path"), "left_anti")
       .collect().map(_.getString(0))
@@ -1088,7 +1165,7 @@ object Cdc {
         .map(r => (r.getString(0), r.getString(1))).toSeq
     def readSet(rows: Seq[(String, String)]): DataFrame =
       rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (lang, ps) =>
-        spark.read.parquet(ps.map(_._2).sorted: _*)
+        spark.read.schema(dataFileSchema).parquet(ps.map(_._2).sorted: _*)
           .select(col("doc_id"), lit(lang).as("lang"), col("text"))
       }.reduce(_ unionByName _)
     val o = readSet(changed(mOld, mNew))
@@ -1168,22 +1245,22 @@ object Cdc {
     val logB = log.localCheckpoint()
     val touched = logB.select("lang").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    // the touched-lang list prunes the parent MANIFEST partitions before
-    // any file list is collected (same discipline as mergeCommit). No
-    // checkpoint: the as-of read feeds exactly one consumer (the
-    // anti-join∪union write below), so materializing it first was a
-    // pure extra pass per streamed commit.
-    val cur = readVersion(spark, root, fromV, touched)
+    // one collect of the parent manifest: the touched langs' rows name
+    // the files to read, the others carry over verbatim (same discipline
+    // as mergeCommit). No checkpoint: the as-of read feeds exactly one
+    // consumer (the anti-join∪union write below), so materializing it
+    // first was a pure extra pass per streamed commit.
+    val (touchedRows, clean) = manifestRows(spark, Seq(s"$root/m/v=$fromV"))
+      .head.partition(e => touched.contains(e.lang))
+    val cur = scanFiles(spark, touchedRows.map(e => (e.lang, e.path)))
       .select("doc_id", "text", "lang", "source", "n_chars")
     cur.join(logB.where(col("op").isin("D", "U")).select("doc_id"),
         Seq("doc_id"), "left_anti")
       .unionByName(logB.where(col("op").isin("U", "I"))
         .select("doc_id", "text", "lang", "source", "n_chars"))
       .write.mode("overwrite").partitionBy("lang").parquet(s"$root/d$toV")
-    val parent = manifestFrame(spark, s"$root/m/v=$fromV")
-    writeManifest(
-      parent.where(!col("lang").isin(touched: _*))
-        .unionByName(manifestEntries(spark, s"$root/d$toV", touched)),
+    writeManifest(spark,
+      clean ++ manifestEntries(spark, s"$root/d$toV", touched),
       s"$root/m/v=$toV")
   }
 
@@ -1453,10 +1530,11 @@ object Cdc {
           // rebase: head's rows for untouched partitions + the branch's
           // fresh rows for its dirty ones, staged then renamed — the
           // same one-rename commit point as a clean publish
-          val headM = manifestFrame(spark, s"$root/m/v=$head")
-          val branchM = manifestFrame(spark, s"$root/m/b_$branch", dirty)
-          writeManifest(
-            headM.where(!col("lang").isin(dirty: _*)).unionByName(branchM),
+          val Seq(headM, branchM) = manifestRows(spark,
+            Seq(s"$root/m/v=$head", s"$root/m/b_$branch"))
+          writeManifest(spark,
+            headM.filterNot(e => dirty.contains(e.lang)) ++
+              branchM.filter(e => dirty.contains(e.lang)),
             s"$root/m/rb_$branch")
           fs.delete(new org.apache.hadoop.fs.Path(s"$root/m/b_$branch"), true)
           s"$root/m/rb_$branch"
@@ -1527,6 +1605,13 @@ object Cdc {
     * 100 TB the affected-file tagging is what a bloom/zone index
     * prunes; the rewrite set is bounded by where the purged ids
     * actually live, not by corpus size.
+    *
+    * The metadata side runs on the driver. One collect reads every live
+    * manifest (|versions| × |files| rows, metadata-sized); the
+    * replacement files' zone maps come from their footers
+    * ([[fileZoneMap]]); the path substitution is a driver map over the
+    * held rows; each manifest is rewritten by [[writeManifest]]. Spark
+    * jobs run only for the data: the tagging scan and the rewrite.
     */
   def rtbfPurge(
       spark: SparkSession, root: String, versions: Seq[Int],
@@ -1534,23 +1619,19 @@ object Cdc {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    val manifests: Seq[(Int, DataFrame)] = versions.map { v =>
-      v -> manifestFrame(spark, s"$root/m/v=$v")
-    }
+    val manifests: Seq[(Int, Seq[ManifestEntry])] =
+      versions.zip(manifestRows(spark, versions.map(v => s"$root/m/v=$v")))
     // the distinct file set IS the tagging scan's work list — the one
-    // path list a driver must hand the scheduler to start any read; the
-    // manifests themselves are never collected (the dedup across
-    // versions runs engine-side)
-    val distinctPaths = manifests.map(_._2.select("path"))
-      .reduce(_ unionByName _).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    // path list a driver must hand the scheduler to start any read
+    val distinctPaths = manifests.flatMap(_._2.map(_.path)).distinct.sorted
     // scanned files key back to their manifest paths through the as-of
     // read's shared key ([[scanKey]]) — the one scan/manifest path
     // mapping, whatever characters the root or the URI scheme carry
-    val affected: Set[String] = spark.read.parquet(distinctPaths: _*)
-      .where(col("doc_id") % purgeMod === purgeRes)
-      .select(input_file_name()).distinct()
-      .collect().map(r => normalizeScanPath(r.getString(0))).toSet
+    val affected: Set[String] =
+      spark.read.schema(dataFileSchema).parquet(distinctPaths: _*)
+        .where(col("doc_id") % purgeMod === purgeRes)
+        .select(input_file_name()).distinct()
+        .collect().map(r => normalizeScanPath(r.getString(0))).toSet
     // rewrite ALL affected files in ONE job: rows keyed back to their
     // source file, repartitioned so each replacement directory gets
     // exactly one file. A fully-purged file yields no output directory
@@ -1560,74 +1641,37 @@ object Cdc {
       .map(p => (p, scanKey(p))).filter { case (_, k) => affected(k) }.unzip
     require(affectedKeys.distinct.size == affectedKeys.size,
       "ambiguous scan keys in the purge rewrite")
-    if (affectedPaths.nonEmpty) {
-      // broadcast-joined key table, not a literal map expression: at
-      // corpus scale the affected-file list is hundreds of entries and a
-      // giant literal would trip the 64 KB codegen fallback
-      val keys = affectedKeys.zipWithIndex.toDF("__p", "fidx")
-      spark.read.parquet(affectedPaths: _*)
-        .where(col("doc_id") % purgeMod =!= purgeRes)
-        .withColumn("__p",
-          regexp_replace(input_file_name(), scanPathNormRe, ""))
-        .join(broadcast(keys), Seq("__p")).drop("__p")
-        .repartition(col("fidx"))
-        .write.mode("overwrite").partitionBy("fidx").parquet(s"$root/purge")
-    }
-    // old→new path substitution per manifest, as a broadcast join of the
-    // purge-bounded rename table against each manifest TABLE on the
-    // manifest's own `path` (both sides come from the manifests, so the
-    // raw strings match): affected & rewritten rows substitute, affected
-    // & fully-purged rows drop, untouched rows carry verbatim. The driver
-    // holds only the rename table (|affected| rows); manifests are read,
-    // joined, checkpointed (the read-then-overwrite barrier) and
-    // rewritten engine-side.
-    // fresh zone maps for the replacement files (one pruned read of the
-    // purge output, |affected| rows) — the rewritten files shrank, so
-    // their manifest stats are recomputed rather than carried stale
-    val newStats: Map[Int, (Long, Long, Long, Long, Long)] =
-      if (affectedPaths.isEmpty) Map.empty
-      else spark.read.parquet(s"$root/purge")
-        .groupBy(col("fidx"))
-        .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
-          min(col("n_chars")).as("mnc"), max(col("n_chars")).as("mxc"),
-          count(lit(1)).as("n"))
-        .collect()
-        .map(r => r.getInt(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-            r.getLong(5))))
-        .toMap
-    val renames: Seq[(String, String, Int, Long, Long, Long, Long, Long)] =
+    if (affectedPaths.isEmpty) return
+    // broadcast-joined key table, not a literal map expression: at
+    // corpus scale the affected-file list is hundreds of entries and a
+    // giant literal would trip the 64 KB codegen fallback
+    val keys = affectedKeys.zipWithIndex.toDF("__p", "fidx")
+    spark.read.schema(dataFileSchema).parquet(affectedPaths: _*)
+      .where(col("doc_id") % purgeMod =!= purgeRes)
+      .withColumn("__p",
+        regexp_replace(input_file_name(), scanPathNormRe, ""))
+      .join(broadcast(keys), Seq("__p")).drop("__p")
+      .repartition(col("fidx"))
+      .write.mode("overwrite").partitionBy("fidx").parquet(s"$root/purge")
+    // old path → its replacement (path, fresh zone map: the rewritten
+    // file shrank, so its stats come from its own footer), or None when
+    // every row of the file was purged
+    val renames: Map[String, Option[(String, ZoneMap)]] =
       affectedPaths.zipWithIndex.map { case (p, idx) =>
-        val np = partFiles(spark, s"$root/purge/fidx=$idx")
-          .headOption.orNull
-        val (mn, mx, mnc, mxc, n) =
-          newStats.getOrElse(idx, (0L, 0L, 0L, 0L, 0L))
-        (p, np, 1, mn, mx, mnc, mxc, n)
-      }
+        val files = partFiles(spark, s"$root/purge/fidx=$idx")
+        require(files.size <= 1,
+          s"rtbf purge: ${files.size} replacement files for $p, expected one")
+        p -> files.headOption.map(np => (np, fileZoneMap(spark, np)))
+      }.toMap
     affectedPaths.foreach(p =>
       fs.delete(new org.apache.hadoop.fs.Path(p), false))
-    if (renames.nonEmpty) {
-      val renDf = renames.toDF("path", "new_path", "hit",
-        "nw_min_doc_id", "nw_max_doc_id", "nw_min_n_chars",
-        "nw_max_n_chars", "nw_n_rows")
-      manifests.foreach { case (v, m) =>
-        val rewritten = m
-          .join(broadcast(renDf), Seq("path"), "left")
-          .where(col("hit").isNull || col("new_path").isNotNull)
-          .select(col("lang"),
-            coalesce(col("new_path"), col("path")).as("path"),
-            coalesce(col("nw_min_doc_id"), col("min_doc_id"))
-              .as("min_doc_id"),
-            coalesce(col("nw_max_doc_id"), col("max_doc_id"))
-              .as("max_doc_id"),
-            coalesce(col("nw_min_n_chars"), col("min_n_chars"))
-              .as("min_n_chars"),
-            coalesce(col("nw_max_n_chars"), col("max_n_chars"))
-              .as("max_n_chars"),
-            coalesce(col("nw_n_rows"), col("n_rows")).as("n_rows"))
-          .localCheckpoint()
-        writeManifest(rewritten, s"$root/m/v=$v")
-      }
+    manifests.foreach { case (v, rows) =>
+      writeManifest(spark, rows.flatMap { e =>
+        renames.get(e.path) match {
+          case None => Some(e) // untouched: carried verbatim
+          case Some(repl) => repl.map { case (np, z) => e.copy(path = np, zone = z) }
+        }
+      }, s"$root/m/v=$v")
     }
   }
 
@@ -1929,7 +1973,7 @@ object Cdc {
       v: Int, zoneRows: Int, layout: Layout): Unit = {
     writeData(layout.keyed(df), s"$root/d$v", zoneRows, layout.sortCols,
       outCols = storeCols)
-    writeManifest(manifestEntries(spark, s"$root/d$v",
+    writeManifest(spark, manifestEntries(spark, s"$root/d$v",
       dataLangs(spark, s"$root/d$v")), s"$root/m/v=$v")
   }
 

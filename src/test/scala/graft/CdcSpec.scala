@@ -10,6 +10,9 @@ import graft.operators.{Cdc, Governance, StorageLayout}
 class CdcSpec extends GraftSpec {
   import spark.implicits._
 
+  /** Spark jobs of one [[Cdc.rtbfStore]] build on `fixture2`. */
+  private val RtbfBuildJobs = 17
+
   // en clean; de/fr dirty with every op firing, including the overlap
   // cases (77 = 7·11 delete-beats-update; 91 = 7·13 update AND insert
   // seed) and a stored n_chars deliberately != length(text) to pin that
@@ -328,6 +331,120 @@ class CdcSpec extends GraftSpec {
       ms.flatMap(m => Cdc.dirtyLangs.flatMap(m(_))).toSet
     assert((dirtySet(after) -- dirtySet(before)).size <=
       (dirtySet(before) -- dirtySet(after)).size)
+  }
+
+  /** The number of Spark jobs `body` starts on the test session: jobs are
+    * numbered in submission order, so it is the count of job ids strictly
+    * between two marker jobs run just before and just after it. Listener
+    * events arrive asynchronously, in order, so the count is read once
+    * the closing marker has been seen.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-of-open")
+      body
+      marker("jobs-of-close")
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.containsValue("jobs-of-close") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      val ids = seen.asScala
+      def idOf(g: String) = ids.collectFirst { case (id, `g`) => id }.getOrElse(
+        fail(s"marker job $g never reached the listener"))
+      idOf("jobs-of-close") - idOf("jobs-of-open") - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("rtbf store build: commit metadata runs no Spark job of its own") {
+    val root = java.nio.file.Files.createTempDirectory("graft_rtbf_jobs").toString
+    // what is left is data work: the v0 write; per merge the manifest
+    // collect, the as-of read's checkpoint and the write; the purge's
+    // manifest collect, tagging scan and rewrite; plus the jobs adaptive
+    // execution starts for their broadcast and shuffle stages. A
+    // schema-inference job per read, a Spark manifest write per commit or
+    // a checkpoint barrier per rewritten manifest adds jobs and fails
+    // this pin.
+    assert(jobsOf(Cdc.rtbfStore(spark, fixture2, root)) === RtbfBuildJobs)
+    assert(rowSet(Cdc.readVersion(spark, root, 2)) ===
+      day2Final.filter(_._1 % 101 != 7))
+  }
+
+  test("a manifest written by Spark's partitionBy reads back like the " +
+    "driver-written one") {
+    val root = java.nio.file.Files.createTempDirectory("graft_mf").toString
+    Cdc.versionedInit(spark, fixture2, s"$root/store")
+    val driver = s"$root/store/m/v=0"
+    val rows = Cdc.manifestRows(spark, Seq(driver)).head
+    assert(rows.map(_.lang).distinct.sorted === Seq("de", "en", "fr"))
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+        rows.map(e => org.apache.spark.sql.Row(e.lang +: e.path +: e.zone.values: _*))
+          .asJava,
+        Cdc.manifestSchema)
+      .write.partitionBy("lang").parquet(s"$root/spark")
+    def read(p: String) = Cdc.manifestFrame(spark, p)
+    assert(read(s"$root/spark").schema === read(driver).schema)
+    assert(read(s"$root/spark").collect().toSet === read(driver).collect().toSet)
+    assert(Cdc.manifestRows(spark, Seq(s"$root/spark")).head === rows)
+    // the driver's files infer to the same schema Spark's own do
+    assert(spark.read.parquet(driver).schema ===
+      spark.read.parquet(s"$root/spark").schema)
+    assert(rowSet(Cdc.readManifest(spark, s"$root/spark")) === rowSet(fixture2))
+  }
+
+  test("an empty manifest round-trips: zero rows, an empty as-of read") {
+    val root = java.nio.file.Files.createTempDirectory("graft_mf_empty").toString
+    // the WAP bad-feed path: a feed that wipes every dirty partition
+    // stages zero manifest entries for them
+    Cdc.versionedInit(spark, fixture2, s"$root/store")
+    val killRules = Cdc.DeltaRules(1L, 3L, 9999991L, "bad", "bad", 5000000L)
+    Cdc.wapStage(spark, s"$root/store", 0, "kill", killRules)
+    assert(Cdc.manifestRows(spark, Seq(s"$root/store/m/b_kill")).head
+      .map(_.lang).distinct === Seq("en"))
+    Cdc.writeManifest(spark, Nil, s"$root/m")
+    assert(Cdc.manifestFrame(spark, s"$root/m").collect().isEmpty)
+    assert(Cdc.manifestRows(spark, Seq(s"$root/m")) === Seq(Nil))
+    val read = Cdc.readManifest(spark, s"$root/m")
+    assert(read.schema === Cdc.storeSchema)
+    assert(read.collect().isEmpty)
+    // and a rewrite replaces the previous manifest instead of adding to it
+    Cdc.writeManifest(spark, Nil, s"$root/store/m/v=0")
+    assert(Cdc.readVersion(spark, s"$root/store", 0).collect().isEmpty)
+  }
+
+  test("a commit whose files do not carry the store's schema fails and " +
+    "names the file") {
+    val root = java.nio.file.Files.createTempDirectory("graft_schema").toString
+    // n_chars as INT32: a known-schema read would not see it as the
+    // store's LONG column
+    val e = intercept[IllegalArgumentException] {
+      Cdc.versionedInit(spark,
+        fixture2.withColumn("n_chars", $"n_chars".cast("int")), s"$root/int")
+    }
+    assert(e.getMessage.contains(s"$root/int/d0/lang=") &&
+      e.getMessage.contains("schema"), e.getMessage)
+    assert(!new java.io.File(s"$root/int/m/v=0").exists())
+    // a file missing a column would read back as NULLs under the known
+    // schema: the commit's footer check refuses it instead
+    fixture2.where($"lang" === "en").select("doc_id", "text", "n_chars")
+      .write.parquet(s"$root/short/d0/lang=en")
+    val e2 = intercept[IllegalArgumentException] {
+      Cdc.manifestEntries(spark, s"$root/short/d0", Seq("en"))
+    }
+    assert(e2.getMessage.contains(s"$root/short/d0/lang=en/part-"), e2.getMessage)
   }
 
   test("incremental read: manifest-diff change feed, clean partitions never opened") {

@@ -149,6 +149,57 @@ class CrossCheckSpec extends GraftSpec {
     assert(e.getAs[Long]("n_purchase_after_click") === 0L)
   }
 
+  test("events loads with its footer's schema: the inferred read's schema " +
+    "and rows, for micros and nanos timestamps alike") {
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    // what the loader computed with Spark's schema inference
+    def inferred(path: String) = {
+      val raw = spark.read.parquet(path)
+      raw.withColumn("ts", raw.schema("ts").dataType match {
+        case LongType => expr("timestamp_micros(ts div 1000)")
+        case _ => col("ts").cast(TimestampType)
+      })
+    }
+    def same(dir: String): Unit = {
+      val got = Tables.load(spark, dir, "events")
+      val exp = inferred(s"$dir/events.parquet")
+      assert(got.schema === exp.schema, dir)
+      assert(got.collect().toSet === exp.collect().toSet, dir)
+    }
+    same(sf) // the test data: TIMESTAMP(MICROS), read as TIMESTAMP_NTZ
+    // the benchmark generator's shape: TIMESTAMP(NANOS), read as a Long
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
+    val msg = Types.buildMessage()
+      .optional(INT64).named("event_id")
+      .optional(INT64).as(LogicalTypeAnnotation.timestampType(false,
+        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .optional(INT64).named("user_id")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("event_type")
+      .optional(DOUBLE).named("value")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
+      .named("schema")
+    val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/events.parquet"),
+        spark.sessionState.newHadoopConf()))
+      .withType(msg).build()
+    try (0 until 5).foreach { i =>
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(msg)
+      g.add("event_id", i.toLong)
+      g.add("ts", 1704067200000000000L + i * 1000001L)
+      g.add("user_id", (i % 2).toLong)
+      g.add("event_type", "view")
+      g.add("value", i * 1.5)
+      g.add("props", s"""{"k": $i}""")
+      w.write(g)
+    } finally w.close()
+    same(dir)
+    assert(Tables.load(spark, dir, "events").schema("ts").dataType === TimestampType)
+  }
+
   test("retention cohorts agree with brute force on the corpus") {
     val ev = Tables.load(spark, sf, "events")
     val got = TimeSeries.retentionCohorts(ev).collect()
